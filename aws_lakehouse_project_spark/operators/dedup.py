@@ -297,7 +297,6 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     def kernel(batches):
         import pyarrow as pa
 
-        np.seterr(over="ignore")  # uint64 wrap is intended (mod-p math)
         for batch in batches:
             lst = batch.column(1)
             if isinstance(lst, pa.ChunkedArray):  # pragma: no cover
@@ -314,7 +313,10 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
                 .view(np.uint64)
             )
             x = flat & np.uint64(0xFFFFFFFF)  # pmod(h, 2^32) bit-exact
-            m = (a_np[None, :] * x[:, None] + b_np[None, :]) % p_np
+            # uint64 wrap is intended (mod-p math); scoped so the worker's
+            # other UDFs keep numpy's default overflow handling
+            with np.errstate(over="ignore"):
+                m = (a_np[None, :] * x[:, None] + b_np[None, :]) % p_np
             mins = np.minimum.reduceat(m, offs[:-1] - lo, axis=0)
             yield pa.RecordBatch.from_arrays(
                 [batch.column(0)]

@@ -1337,16 +1337,22 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         part_dir = os.path.join(tmp, f"__drop={i}")
         if not os.path.isdir(part_dir):
             continue
-        for n in os.listdir(part_dir):
-            if n.endswith(".parquet"):
-                dst = os.path.join(drops, f"batch{i}.parquet")
-                shutil.move(os.path.join(part_dir, n), dst)
-                # the file stream replays drops in MTIME order, and the
-                # one-pass partitioned write stamps task-completion-order
-                # mtimes — stamp strictly increasing chronological mtimes
-                # so drop i arrives before drop i+1 (the watermark
-                # contract in the docstring above)
-                os.utime(dst, (t_base + i, t_base + i))
+        parts = [n for n in os.listdir(part_dir) if n.endswith(".parquet")]
+        # hash-partitioning on __drop puts each drop in exactly one task;
+        # several part files would silently overwrite one batchN.parquet
+        if len(parts) != 1:
+            raise RuntimeError(
+                f"expected one parquet file under {part_dir}, found "
+                f"{len(parts)}: {sorted(parts)}"
+            )
+        dst = os.path.join(drops, f"batch{i}.parquet")
+        shutil.move(os.path.join(part_dir, parts[0]), dst)
+        # the file stream replays drops in MTIME order, and the
+        # one-pass partitioned write stamps task-completion-order
+        # mtimes — stamp strictly increasing chronological mtimes
+        # so drop i arrives before drop i+1 (the watermark
+        # contract in the docstring above)
+        os.utime(dst, (t_base + i, t_base + i))
         n_drops += 1
     shutil.rmtree(tmp)
 
@@ -1355,10 +1361,10 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # the micro-batch frame re-executes its whole plan (file-source
-        # read + RocksDB stateful aggregation) on EVERY action, and the
-        # CoW merge consumes it three times (emptiness probe, touched-
-        # file discovery, rewrite union) — persist so the stateful agg
-        # runs once per batch (guide §1.2/§5; churn-sized by definition)
+        # read + RocksDB stateful aggregation) on EVERY action, and it is
+        # read twice (the emptiness probe, then merge_upsert's own pin)
+        # — persist so the stateful agg runs once per batch (guide
+        # §1.2/§5; churn-sized by definition)
         batch_df.persist()
         try:
             if batch_df.isEmpty():

@@ -322,7 +322,9 @@ class LakehousePipeline:
         ``incremental_strategy='merge'``, unique_key=['store_id','dt'])
         — first build publishes through write-audit-publish with the D2
         post-build tests as the audit; EVERY later call MERGEs the given
-        frame on (store_id, dt) copy-on-write, so an incremental run
+        frame on (store_id, dt) copy-on-write, the same tests auditing
+        the merge's pinned source before any file is written, so an
+        incremental run
         passes only its recomputed horizon and pays ∝ touched files,
         never a table rewrite. not_null(store_id, dt) rides as CHECK
         constraints, enforced by every subsequent commit."""
@@ -353,12 +355,14 @@ class LakehousePipeline:
             vt.add_constraint(self.spark, "nn_store_id", "store_id IS NOT NULL")
             vt.add_constraint(self.spark, "nn_dt", "dt IS NOT NULL")
         else:
-            self.post_build_tests(fact)  # D2 gate before the merge commit
+            # the D2 gate audits merge_upsert's pinned source before any
+            # file is written, so the fact's join tree is evaluated once
             vt.merge_upsert(
                 self.spark,
                 fact,
                 keys=["store_id", "dt"],
                 meta={"model": "fct_daily_store_metrics"},
+                audits=[self.post_build_tests],
             )
         if self.config.publish_views:
             vt.read(self.spark).createOrReplaceTempView("fct_daily_store_metrics")

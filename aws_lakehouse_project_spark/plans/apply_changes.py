@@ -740,32 +740,21 @@ def apply_changes_scd2(
                         F.lit("upsert").alias("__op"),
                     )
                 )
-            # churn-sized (closed slice + opened rows) and consumed twice
-            # by merge_apply (touched-file key discovery, then the
-            # rewrite union) — materialize once instead of re-running
-            # the history-slice joins per use (same doctrine as the
-            # replication fold's net.persist)
-            # eager localCheckpoint for the same reason as `delta`
-            # above: merge_apply consumes it twice and each action
-            # otherwise re-analyzes the history-slice join tree
-            # (q_scd1_sql/q_scd2_sql −22-30%, r15 interleaved A/B)
-            upd = upd.localCheckpoint()
-            try:
-                hv = hist.merge_apply(
-                    spark,
-                    upd,
-                    keys=[*keys, "start_v"],
-                    op_col="__op",
-                    meta={
-                        _META_KEY: {
-                            **meta_base,
-                            "src_version": wm_v,
-                            "next_ordinal": ordinal + 1,
-                        }
-                    },
-                )
-            finally:
-                pass  # upd blocks free on GC (localCheckpoint)
+            # merge_apply pins `upd` once, so the history-slice joins
+            # run once per ordinal
+            hv = hist.merge_apply(
+                spark,
+                upd,
+                keys=[*keys, "start_v"],
+                op_col="__op",
+                meta={
+                    _META_KEY: {
+                        **meta_base,
+                        "src_version": wm_v,
+                        "next_ordinal": ordinal + 1,
+                    }
+                },
+            )
             if seq_feed is not None:
                 seq_feed.unpersist()
             ordinal += 1

@@ -804,24 +804,12 @@ def _merge_nets(
     published columns."""
 
     def _commit_changes(changes_df: DataFrame) -> int:
-        # churn-sized and consumed twice by merge_apply (touched-file
-        # key discovery, then the rewrite union) — materialize once so
-        # the fold joins (and the MIN/MAX rescan subtree) never run
-        # twice per refresh
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_MV_CKPT") == "1":
-            out = _publish_dists(changes_df).localCheckpoint()
-            return mv.merge_apply(
-                spark, out, keys, op_col="__op", meta=head_meta
-            )
-        out = _publish_dists(changes_df).persist()
-        try:
-            return mv.merge_apply(
-                spark, out, keys, op_col="__op", meta=head_meta
-            )
-        finally:
-            out.unpersist()
+        # merge_apply pins its source once, so the fold joins (and the
+        # MIN/MAX rescan subtree) run once per refresh
+        return mv.merge_apply(
+            spark, _publish_dists(changes_df), keys, op_col="__op",
+            meta=head_meta,
+        )
 
     def _publish_dists(changes_df: DataFrame) -> DataFrame:
         if dist_df is None:

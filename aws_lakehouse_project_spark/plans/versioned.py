@@ -360,6 +360,13 @@ def _violation_expr(expr: str) -> Column:
     return ~F.coalesce(F.expr(expr), F.lit(True))
 
 
+def _violation_error(path: str, bad: dict) -> ConstraintViolationError:
+    return ConstraintViolationError(
+        f"write to {path} violates CHECK constraint(s) {bad} "
+        "(violating-row counts); commit aborted"
+    )
+
+
 def _count_violations(df: DataFrame, cons: dict) -> dict:
     """One aggregate over ``df`` counting violations of every active
     constraint; returns {name: n_violations} for the non-zero ones."""
@@ -626,14 +633,28 @@ class VersionedTable:
         return self._manifest().get("column_mapping", {})
 
     def _write_commit_files(
-        self, df: DataFrame, version_hint: int, mapping: dict | None = None
+        self,
+        df: DataFrame,
+        version_hint: int,
+        mapping: dict | None = None,
+        checked: dict[str, str] | None = None,
     ) -> tuple[list[str], dict]:
         """Materialize ``df`` into a fresh immutable commit directory;
-        returns (relative file paths, per-file stats). Active CHECK
-        constraints are enforced here — their violation counts ride the
-        stats aggregate (no extra scan); any violation deletes the
-        just-written directory and raises, so every write path is
-        constraint-checked BEFORE a manifest can reference the files.
+        returns (relative file paths, per-file stats).
+
+        ``checked=None``: the head's active CHECK constraints are
+        enforced here — their violation counts ride the stats scan; any
+        violation deletes the just-written directory and raises, so the
+        write path is constraint-checked BEFORE a manifest can reference
+        the files. ``checked`` given: the caller already verified every
+        row the commit ADDS against that constraint set (read from the
+        manifest the commit is based on) — copy-on-write MERGE checks
+        its pinned upsert rows, DELETE and OPTIMIZE add none, and
+        survivor rows come from files the set already covers
+        (``add_constraint``, ``set_not_null`` and ``restore`` validate
+        the head) — so stats come from the parquet footers with no
+        re-scan. Either way the set is recorded for ``_commit``'s
+        claim-time check.
 
         ``df`` arrives with LOGICAL column names; files are written
         with PHYSICAL names (per ``mapping``; None = the head's) so
@@ -661,15 +682,15 @@ class VersionedTable:
             for n in sorted(os.listdir(abs_dir))
             if n.endswith(".parquet")
         ]
-        cons = self.constraints()
+        cons = self.constraints() if checked is None else {}
         try:
             # stats come from the just-written parquet FOOTERS whenever
             # possible (guide §1/§6: the row counts, min/max and null
             # counts are already in the file metadata — re-scanning the
             # data to recompute them is a whole second read of every
             # commit's bytes at 100 TB, and one extra Spark job per
-            # commit locally). Active CHECK constraints still need the
-            # scan (violation counts are expression evaluation), and any
+            # commit locally). An in-write CHECK still needs the scan
+            # (violation counts are expression evaluation), and any
             # footer surprise (missing/inexact stats, exotic type) falls
             # back to the scan — the manifest contents are identical
             # either way (tests/test_footer_stats.py asserts parity).
@@ -687,8 +708,16 @@ class VersionedTable:
             # leave the staged directory orphaned
             shutil.rmtree(abs_dir, ignore_errors=True)
             raise
-        self._validated_constraints = cons
+        self._validated_constraints = cons if checked is None else dict(checked)
         return rel, stats
+
+    def _check_added_rows(self, df: DataFrame, cons: dict[str, str]) -> None:
+        """Raise ``ConstraintViolationError`` (constraint names and
+        violating-row counts) if any row ``df`` would add violates
+        ``cons`` — one aggregate, run before any file is written."""
+        bad = _count_violations(df, cons)
+        if bad:
+            raise _violation_error(self.path, bad)
 
     def constraints(self) -> dict[str, str]:
         """Active CHECK constraints (name → SQL expression) from the
@@ -926,10 +955,7 @@ class VersionedTable:
                 if (n := sum(r[f"__viol_{i}"] for r in rows)) > 0
             }
             if bad:
-                raise ConstraintViolationError(
-                    f"write to {self.path} violates CHECK constraint(s) "
-                    f"{bad} (violating-row counts); commit aborted"
-                )
+                raise _violation_error(self.path, bad)
         by_rel = {}
         for r in rows:
             rel = self._to_rel(r["__file"], borrowed)
@@ -2509,8 +2535,10 @@ class VersionedTable:
         """ALTER TABLE ... ADD CONSTRAINT ... CHECK (expr): validates the
         EXISTING head data in one aggregate (rejecting if any row
         violates, like Delta), then publishes the constraint as a
-        metadata-only commit. Every later write path enforces it inside
-        the commit's own stats pass — no extra scan per write."""
+        metadata-only commit. Every later commit checks the rows it
+        ADDS: appends, overwrites and UPDATEs inside their stats scan;
+        copy-on-write MERGE on its pinned source before writing;
+        DELETE and OPTIMIZE add no rows and take footer stats."""
         if name.startswith(_NOTNULL_PREFIX):
             raise ValueError(
                 f"constraint names under {_NOTNULL_PREFIX!r} are "
@@ -2659,9 +2687,8 @@ class VersionedTable:
         the EXISTING head data (rejecting if any row is NULL, like
         Delta), then persists the invariant as a reserved-name entry
         (``__notnull__<col>``) in the SAME constraint channel CHECK
-        uses — so every later write path (append, merge, WAP staging,
-        schema evolution) enforces it inside the commit's stats pass
-        with no extra scan, and the OCC drift check covers it."""
+        uses — so every later commit checks it on the rows it adds
+        (see ``add_constraint``), and the OCC drift check covers it."""
         m = self._manifest()
         fields = [f["name"] for f in m["schema"]["fields"]]
         if col not in fields:
@@ -3087,24 +3114,42 @@ class VersionedTable:
         updates: DataFrame,
         keys: Sequence[str],
         meta: dict | None = None,
+        audits: Sequence = (),
     ) -> int:
         """Key-level MERGE (WHEN MATCHED UPDATE ALL / NOT MATCHED INSERT
         ALL), file-granular copy-on-write:
 
-        1. semi-join target × update-keys tagged with input_file_name →
+        0. the source is PINNED once (eager ``localCheckpoint``, Delta's
+           ``merge.materializeSource``): every step below reads the
+           churn-sized pinned rows, never re-runs the source's plan,
+        1. ``audits`` (callables taking the pinned frame; raise to
+           reject — ``write_audit_publish``'s shape) run, and the pinned
+           rows are counted against the base manifest's CHECK
+           constraints — both before any file is written,
+        2. semi-join target × update-keys tagged with input_file_name →
            the touched-file set (only files actually holding matched keys),
-        2. rewrite = (touched-file rows ANTI JOIN keys) ∪ updates,
-        3. commit = untouched files by reference + rewritten files.
+        3. rewrite = (touched-file rows ANTI JOIN keys) ∪ updates,
+        4. commit = untouched files by reference + rewritten files, stats
+           from the written files' parquet footers (survivors come from
+           files the constraint set already covers; no re-scan).
 
-        Scale: step 1 shuffles only the key columns; step 2 reads only
+        Scale: step 2 shuffles only the key columns; step 3 reads only
         touched files. An upsert hitting 0.1% of files costs 0.1% of a
         rewrite — the Delta MERGE cost model.
         """
         if not self.exists():
+            for audit in audits:
+                audit(updates)
             return self.write_full(updates, meta)
         m = self._manifest()
         keys = list(keys)
-        updates = self._align_types(updates, m["schema"])
+        updates = self._align_types(updates, m["schema"]).localCheckpoint(
+            eager=True
+        )
+        for audit in audits:
+            audit(updates)
+        cons = m.get("constraints", {})
+        self._check_added_rows(updates, cons)
         tagged = self._tagged_read(spark, m)
         upd_keys = updates.select(*keys).distinct()
         touched = self._touched_files(
@@ -3125,7 +3170,7 @@ class VersionedTable:
         else:
             new_data = updates
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(new_data, hint)
+        files, stats = self._write_commit_files(new_data, hint, checked=cons)
         v = self._commit(
             "merge",
             files,
@@ -3178,7 +3223,10 @@ class VersionedTable:
             spark, touched, schema, dvs=m.get("dvs"), dv_counts=m.get("dv_counts")
         ).filter(~F.coalesce(predicate, F.lit(False)))
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(survivors, hint)
+        # adds no rows: survivors are covered by the constraint set
+        files, stats = self._write_commit_files(
+            survivors, hint, checked=m.get("constraints", {})
+        )
         v = self._commit(
             "delete",
             files,
@@ -3452,8 +3500,13 @@ class VersionedTable:
     ) -> int | None:
         """Full MERGE from a change feed (op='upsert'|'delete') — the
         same contract as ``plans.merge.merge_apply``, executed
-        copy-on-write: one touched-file discovery over ALL change keys,
-        one rewrite dropping matched rows, upserts unioned back in.
+        copy-on-write: ``changes`` is pinned once (eager
+        ``localCheckpoint``), its upsert rows are counted against the
+        base manifest's CHECK constraints before any file is written,
+        then one touched-file discovery over ALL change keys, one
+        rewrite dropping matched rows, upserts unioned back in; stats
+        come from the written files' parquet footers (see
+        ``merge_upsert``). Callers need not pin ``changes`` themselves.
 
         Returns the new version, or None when the table does not exist
         yet AND the batch carries no upserts (a delete-only feed against
@@ -3465,12 +3518,15 @@ class VersionedTable:
                 f"(columns: {changes.columns})"
             )
         keys = list(keys)
+        changes = changes.localCheckpoint(eager=True)
         upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
         if not self.exists():
             if upserts.isEmpty():
                 return None
             return self.write_full(upserts, meta)
         m = self._manifest()
+        cons = m.get("constraints", {})
+        self._check_added_rows(upserts, cons)
         tagged = self._tagged_read(spark, m)
         all_keys = changes.select(*keys).distinct()
         touched = self._touched_files(tagged.join(all_keys, keys, "left_semi"))
@@ -3487,7 +3543,7 @@ class VersionedTable:
         else:
             new_data = upserts
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(new_data, hint)
+        files, stats = self._write_commit_files(new_data, hint, checked=cons)
         v = self._commit(
             "merge",
             files,
@@ -3587,7 +3643,10 @@ class VersionedTable:
         else:
             df = df.repartition(n_out)
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(df, hint)
+        # content-identical rewrite: adds no rows, checks nothing
+        files, stats = self._write_commit_files(
+            df, hint, checked=m.get("constraints", {})
+        )
         # no _maybe_cdf: a layout-only commit's change feed is empty by
         # construction (materialize_changes would no-op anyway)
         scope = (

@@ -263,7 +263,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     import __spark_entry__ as entrymod
-    from aws_lakehouse_project_spark.session import build_session
+    from aws_lakehouse_project_spark.session import DEFAULT_CPUS, build_session
 
     spark = build_session(app_name="bench")
 
@@ -439,7 +439,7 @@ def main() -> None:
                 # session really is local[$SPARK_GRAFT_CPUS] — publish
                 # what the JVM actually saw so the driver's scaling
                 # check can verify it instead of inferring from ratios.
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": int(DEFAULT_CPUS),
                 "default_parallelism": spark.sparkContext.defaultParallelism,
             }
         )

@@ -1905,3 +1905,116 @@ def test_clone_inherits_change_feed_from_source(spark, cdf_vt, tmp_path):
     # explicit override still wins
     off = cdf_vt.clone(str(tmp_path / "cl_off"), change_feed=False)
     assert off.change_feed is False
+
+
+# -- copy-on-write MERGE: pinned source, added-row checks, footer stats -----
+
+
+def _data_dirs(vt):
+    return sorted(os.listdir(os.path.join(vt.path, "data")))
+
+
+def _counted(spark, df):
+    """``df`` with ``k`` routed through a Python UDF that counts every
+    evaluation in an accumulator."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("int")
+    def tick(k):
+        acc.add(1)
+        return k
+
+    return df.withColumn("k", tick("k")), acc
+
+
+def test_merge_source_is_evaluated_once(spark, vt):
+    vt.write_full(_mk(spark, [(k, "old") for k in range(10)]))
+    vt.add_constraint(spark, "k_nonneg", "k >= 0")
+    upd, acc = _counted(spark, _mk(spark, [(k, "new") for k in range(5, 15)]))
+    vt.merge_upsert(spark, upd, keys=["k"])
+    assert acc.value == 10
+    assert _rows(vt.read(spark)) == sorted(
+        [(k, "old") for k in range(5)] + [(k, "new") for k in range(5, 15)]
+    )
+    changes = spark.createDataFrame(
+        [(0, "up", "upsert"), (20, "ins", "upsert"), (7, None, "delete")],
+        "k int, v string, op string",
+    )
+    changes, acc = _counted(spark, changes)
+    vt.merge_apply(spark, changes, keys=["k"])
+    assert acc.value == 3
+    got = dict(_rows(vt.read(spark)))
+    assert got[0] == "up" and got[20] == "ins" and 7 not in got
+
+
+def test_merge_apply_rejects_violating_upserts_before_writing(spark, vt):
+    from aws_lakehouse_project_spark.plans.versioned import (
+        ConstraintViolationError,
+    )
+
+    vt.write_full(_mk(spark, [(1, "a"), (2, "b")]))
+    v1 = vt.add_constraint(spark, "k_small", "k < 100")
+    head, dirs = _rows(vt.read(spark)), _data_dirs(vt)
+    bad = spark.createDataFrame(
+        [(2, "B", "upsert"), (500, "x", "upsert"), (1, None, "delete")],
+        "k int, v string, op string",
+    )
+    with pytest.raises(ConstraintViolationError, match="k_small"):
+        vt.merge_apply(spark, bad, keys=["k"])
+    with pytest.raises(ConstraintViolationError, match="'k_small': 1"):
+        vt.merge_upsert(spark, _mk(spark, [(2, "B"), (500, "x")]), keys=["k"])
+    # rejected before any file was written: head and data/ untouched
+    assert vt.latest_version() == v1
+    assert _rows(vt.read(spark)) == head
+    assert _data_dirs(vt) == dirs
+    # a delete row adds nothing, so its values are not checked
+    ok = spark.createDataFrame(
+        [(2, "B", "upsert"), (500, None, "delete")],
+        "k int, v string, op string",
+    )
+    vt.merge_apply(spark, ok, keys=["k"])
+    assert _rows(vt.read(spark)) == [(1, "a"), (2, "B")]
+
+
+def test_merge_audits_gate_the_pinned_source(spark, vt):
+    vt.write_full(_mk(spark, [(1, "a")]))
+    head, dirs = vt.latest_version(), _data_dirs(vt)
+    seen = []
+
+    def audit(df):
+        seen.append(df.count())
+        raise ValueError("audit failed")
+
+    with pytest.raises(ValueError, match="audit failed"):
+        vt.merge_upsert(
+            spark, _mk(spark, [(1, "A"), (2, "b")]), keys=["k"], audits=[audit]
+        )
+    assert seen == [2]
+    assert vt.latest_version() == head and _data_dirs(vt) == dirs
+    vt.merge_upsert(
+        spark, _mk(spark, [(1, "A")]), keys=["k"], audits=[lambda df: None]
+    )
+    assert _rows(vt.read(spark)) == [(1, "A")]
+
+
+def test_cow_commit_stats_match_scan_on_constrained_table(spark, tmp_path):
+    vt = VersionedTable(str(tmp_path / "t"), stats_cols=["k", "v"])
+    vt.write_full(_mk(spark, [(k, f"v{k}") for k in range(40)]).repartition(4))
+    vt.add_constraint(spark, "k_nonneg", "k >= 0")
+    vt.set_not_null(spark, "v")
+
+    def _parity():
+        m = vt._manifest()
+        assert {f: m["stats"][f] for f in m["files"]} == vt._file_stats(
+            spark, m["files"]
+        )
+
+    vt.merge_upsert(spark, _mk(spark, [(3, "x"), (50, "y")]), keys=["k"])
+    _parity()
+    vt.delete_where(spark, "k % 3 = 0")
+    assert vt._manifest()["op"] == "delete"
+    _parity()
+    vt.optimize(spark, target_rows_per_file=1000)
+    assert vt._manifest()["op"] == "optimize"
+    _parity()
+    assert len(vt._manifest()["files"]) == 1
