@@ -275,6 +275,11 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     shingles (``_minhash_grams``). Each permutation is (a*x+b) mod p
     over the 32-bit shingle hash; the signature is k mins per document.
 
+    Precondition: ``doc_id`` is unique in ``docs``. The kernel folds
+    each input row into its own signature row, so a duplicated
+    ``doc_id`` yields several signature rows under one id rather than
+    one signature over the union of their shingles.
+
     The k-permutation fold runs as ONE vectorized numpy kernel over
     Arrow batches (``mapInArrow``, guide §4.2): shingle lists arrive as
     a contiguous int64 buffer + offsets, the (n_shingles × k) permuted

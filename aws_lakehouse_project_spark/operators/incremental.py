@@ -1,38 +1,26 @@
-"""Incremental materialized-view maintenance over the change feed.
+"""Incremental materialized-view demos on the declarative engine.
 
 A derived aggregate (the reference's ``fct_daily_store_metrics`` shape —
 ``dbt/models/marts/fct_daily_store_metrics.sql:3-4`` declares exactly
 this "merge the last 7 days, never recompute" contract) is kept current
-by FOLDING the table's CDF deltas into it instead of recomputing from
-the base table. SUM / COUNT are self-maintainable aggregates: an
-``insert``/``update_postimage`` row adds its measures, a
-``delete``/``update_preimage`` row subtracts them, and a group whose
-maintained row count reaches zero is dropped. MIN/MAX are NOT
-self-maintainable under deletes — a retracted extremum needs a re-scan
-of its group — so ``fold_changes_into_minmax`` keeps them exact with a
-BOUNDED rescan: inserts fold as ``least``/``greatest`` for free, and
-only the groups whose delta provably MIGHT have retracted the current
-extremum (a deleted value ≤ the maintained MIN or ≥ the maintained MAX)
-are recomputed from the base table, semi-joined down to exactly those
-group keys.
+by folding the base table's change feed into it instead of recomputing
+from the base table. Each query here declares its view through
+``LakehouseSession.sql`` (``CREATE MATERIALIZED VIEW … FROM t VERSION AS
+OF v0``) over a committed base history and advances it with ``REFRESH
+MATERIALIZED VIEW`` — or, for ``q_stream_mv``, by draining the change
+feed as a stream. The maintenance itself lives in ``plans/matview.py``:
+signed SUM/COUNT folds, the bounded MIN/MAX rescan, COUNT(DISTINCT)
+support tables and the bilinear JOIN delta.
 
-Why this is the 100 TB shape: the fold's input is ``changes(v_a, v_b)``
-(``plans/versioned.py:1357``), whose scan cost is proportional to the
-CHURN between the versions — never the base table — and the per-group
-delta aggregate collapses that churn map-side before one small
-full-outer join against the MV on its own grouping key. Refreshing a
-daily-revenue MV over a 100 TB fact after an upsert that touched 0.1%
-of files reads ~0.2% of the data and shuffles only the delta groups.
-Measures stay in exact decimal through the fold (``functions/money.py``
-rationale): double addition is order-dependent, so an incrementally
-folded double SUM would drift from a full recompute; decimal addition
-is associative and the fold is bit-identical to the recompute.
+Every oracle is the full recompute of the final state: incremental
+maintenance must be indistinguishable from recomputation. Measures stay
+in exact decimal (``functions/money.py`` rationale): decimal addition is
+associative, so the fold is bit-identical to the recompute.
 """
 
 from __future__ import annotations
 
 import os
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,214 +28,22 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.money import money
 from ..functions.scratch import scratch_dir
+from ..plans.lakehouse_sql import LakehouseSession
+from ..plans.matview import stream_refresh_materialized_view
 from ..plans.versioned import VersionedTable
 from .registry import demo_query
 
-#: CDF rows that ADD their measures to the aggregate; everything else
-#: (delete / update_preimage) subtracts. Matches changes()'s vocabulary.
-_ADDITIVE = ("insert", "update_postimage")
-
-
-def fold_changes_into_aggregate(
-    mv: DataFrame,
-    delta: DataFrame,
-    group_keys: list[str],
-    sum_cols: list[str],
-    count_col: str = "n_rows",
-) -> DataFrame:
-    """Fold one CDF delta (``VersionedTable.changes`` output) into a
-    SUM/COUNT materialized view.
-
-    ``mv`` columns must be exactly ``group_keys + sum_cols + [count_col]``
-    where ``count_col`` counts base-table rows per group (COUNT(*) at
-    build time); ``delta`` must already carry every ``group_keys`` /
-    ``sum_cols`` column under the MV's names (select/alias the change
-    feed before folding when the base table names differ). Returns the refreshed MV with the same schema: each
-    sum column is cast back to its MV dtype so repeated folds keep a
-    stable schema (decimal precision would otherwise widen per fold).
-
-    The delta is aggregated FIRST (map-side combine collapses the churn
-    to at most one row per touched group), then a single full-outer
-    join on the grouping key merges it into the MV; groups whose
-    maintained row count reaches zero are retired. Keys join
-    null-safely: a NULL group key is a legal aggregate group.
-
-    NULL-measure contract: a group whose sum is NULL (zero non-null
-    values) STAYS NULL while no values touch it, but a delete that
-    removes a group's LAST non-null value folds to 0 where SQL's SUM
-    would return NULL — distinguishing those needs a per-column
-    non-null count the (sum, row-count) pair doesn't carry. Callers
-    needing NULL-exact sums under such deletes should maintain the
-    hidden ``__nn__`` columns the way ``plans/matview.py`` does
-    (pg_ivm's construction); measures declared NOT NULL (every demo
-    here) are exact either way.
-    """
-    sign = F.when(F.col("_change_type").isin(*_ADDITIVE), 1).otherwise(-1)
-    d = (
-        delta.select(*group_keys, sign.alias("__s"), *sum_cols)
-        .groupBy(*group_keys)
-        .agg(
-            *[F.sum(F.col(c) * F.col("__s")).alias(c) for c in sum_cols],
-            F.sum("__s").cast("long").alias(count_col),
-        )
-    )
-    mv_types = {f.name: f.dataType for f in mv.schema.fields}
-    m, dd = mv.alias("m"), d.alias("d")
-    on = reduce(
-        lambda a, b: a & b,
-        [F.col(f"m.{k}").eqNullSafe(F.col(f"d.{k}")) for k in group_keys],
-    )
-    keep = [
-        F.coalesce(F.col(f"m.{k}"), F.col(f"d.{k}")).alias(k)
-        for k in group_keys
-    ]
-    sums = [
-        # both sides NULL → NULL (SQL SUM of an all-NULL group is NULL,
-        # and a NULL-sum group untouched by values must stay NULL —
-        # coalesce-to-0 alone would silently rewrite it as 0)
-        F.when(
-            F.col(f"m.{c}").isNull() & F.col(f"d.{c}").isNull(),
-            F.lit(None),
-        )
-        .otherwise(
-            F.coalesce(F.col(f"m.{c}"), F.lit(0))
-            + F.coalesce(F.col(f"d.{c}"), F.lit(0))
-        )
-        .cast(mv_types[c])
-        .alias(c)
-        for c in sum_cols
-    ]
-    cnt = (
-        F.coalesce(F.col(f"m.{count_col}"), F.lit(0))
-        + F.coalesce(F.col(f"d.{count_col}"), F.lit(0))
-    ).cast("long")
-    return (
-        m.join(dd, on, "full_outer")
-        .select(*keep, *sums, cnt.alias(count_col))
-        .filter(F.col(count_col) > 0)
-    )
-
-
-def fold_changes_into_minmax(
-    mv: DataFrame,
-    delta: DataFrame,
-    base: DataFrame,
-    group_keys: list[str],
-    val_col: str,
-    min_col: str = "min_val",
-    max_col: str = "max_val",
-    count_col: str = "n_rows",
-) -> tuple[DataFrame, DataFrame]:
-    """Fold one CDF delta into a MIN/MAX materialized view with a
-    bounded rescan-on-retraction. Returns ``(refreshed_mv,
-    rescanned_keys)`` — the second frame carries exactly the group
-    keys that needed a base-table recompute, so callers can assert
-    (and monitor) that rescans stay ≪ total groups.
-
-    ``mv`` columns: ``group_keys + [min_col, max_col, count_col]``
-    (``count_col`` is COUNT(*) per group; a group retires at zero).
-    ``delta`` is ``changes()`` output carrying ``group_keys`` and
-    ``val_col``; ``base`` is the base table AT THE DELTA'S TO-VERSION
-    (e.g. ``vt.read(spark, to_version)``) — it is only ever read
-    semi-joined down to the triggered groups.
-
-    Maintenance rules (classic self-maintainability results — inserts
-    strengthen extrema monotonically, deletes may retract them):
-
-    * insert-only groups fold as ``least(old_min, ins_min)`` /
-      ``greatest(old_max, ins_max)`` — no base read;
-    * a group with deleted values triggers a rescan ONLY when a
-      deleted value ties-or-beats the maintained extremum
-      (``del_min <= old_min`` or ``del_max >= old_max``) or the MV
-      state is missing/degenerate — the conservative superset of true
-      retractions (a deleted duplicate of the extremum rescans
-      harmlessly);
-    * triggered groups are recomputed from ``base`` semi-joined on a
-      broadcast of exactly those keys — at 100 TB the rescan reads
-      one group's slice per retraction (partition/stats-pruned when
-      the MV key is the table's partition or stats column), never the
-      table.
-
-    NULL values are ignored by MIN/MAX (SQL semantics): deleting a
-    NULL never triggers a rescan; NULL group KEYS are legal groups and
-    join null-safely throughout."""
-    sign = F.when(F.col("_change_type").isin(*_ADDITIVE), 1).otherwise(-1)
-    val = F.col(val_col)
-    d = (
-        delta.select(*group_keys, sign.alias("__s"), val.alias("__v"))
-        .groupBy(*group_keys)
-        .agg(
-            F.min(F.when(F.col("__s") == 1, F.col("__v"))).alias("__ins_min"),
-            F.max(F.when(F.col("__s") == 1, F.col("__v"))).alias("__ins_max"),
-            F.min(F.when(F.col("__s") == -1, F.col("__v"))).alias("__del_min"),
-            F.max(F.when(F.col("__s") == -1, F.col("__v"))).alias("__del_max"),
-            F.sum("__s").cast("long").alias("__dc"),
-        )
-    )
-    mv_types = {f.name: f.dataType for f in mv.schema.fields}
-    m, dd = mv.alias("m"), d.alias("d")
-    on = reduce(
-        lambda a, b: a & b,
-        [F.col(f"m.{k}").eqNullSafe(F.col(f"d.{k}")) for k in group_keys],
-    )
-    j = m.join(dd, on, "full_outer")
-    keep = [
-        F.coalesce(F.col(f"m.{k}"), F.col(f"d.{k}")).alias(k)
-        for k in group_keys
-    ]
-    old_cnt = F.col(f"m.{count_col}")
-    new_cnt = (F.coalesce(old_cnt, F.lit(0)) + F.coalesce(F.col("__dc"), F.lit(0))).cast("long")
-    trigger = F.col("__del_min").isNotNull() & (
-        old_cnt.isNull()
-        | F.col(f"m.{min_col}").isNull()
-        | (F.col("__del_min") <= F.col(f"m.{min_col}"))
-        | (F.col("__del_max") >= F.col(f"m.{max_col}"))
-    )
-    folded = (
-        j.filter(~F.coalesce(trigger, F.lit(False)))
-        .select(
-            *keep,
-            F.least(F.col(f"m.{min_col}"), F.col("__ins_min"))
-            .cast(mv_types[min_col])
-            .alias(min_col),
-            F.greatest(F.col(f"m.{max_col}"), F.col("__ins_max"))
-            .cast(mv_types[max_col])
-            .alias(max_col),
-            new_cnt.alias(count_col),
-        )
-        .filter(F.col(count_col) > 0)
-    )
-    rescan_keys = j.filter(F.coalesce(trigger, F.lit(False))).select(
-        *[
-            F.coalesce(F.col(f"m.{k}"), F.col(f"d.{k}")).alias(k)
-            for k in group_keys
-        ]
-    )
-    b, rk = base.alias("b"), F.broadcast(rescan_keys.alias("rk"))
-    semi_on = reduce(
-        lambda a, b_: a & b_,
-        [F.col(f"b.{k}").eqNullSafe(F.col(f"rk.{k}")) for k in group_keys],
-    )
-    rescanned = (
-        b.join(rk, semi_on, "left_semi")
-        .groupBy(*group_keys)
-        .agg(
-            F.min(val_col).cast(mv_types[min_col]).alias(min_col),
-            F.max(val_col).cast(mv_types[max_col]).alias(max_col),
-            F.count(F.lit(1)).cast("long").alias(count_col),
-        )
-    )
-    return folded.unionByName(rescanned), rescan_keys
-
-
 _DECIMAL_REV = "decimal(18,2)"
+
+#: sf_dir → (fact_path, v0): per-process memo of the daily-fact history
+#: shared by q_incremental_mv, q_incremental_mv_var and q_stream_mv.
+_DAILY_FACT_CACHE: dict[str, tuple[str, int]] = {}
 
 
 def _daily_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The q_versioned_merge daily fact, revenue kept in EXACT decimal
+    """The q_versioned_merge order rows, price kept in EXACT decimal
     (not cast to double) so incremental folds are bit-stable — see the
-    module docstring. Same %10 / %7 scenario literals as
-    ``lakehouse._stale_and_upd``; keep in lock-step with the oracle."""
+    module docstring."""
     return load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_custkey").alias("cust_id"),
@@ -261,6 +57,76 @@ def _daily_agg(df: DataFrame) -> DataFrame:
         F.sum("price").cast(_DECIMAL_REV).alias("revenue"),
         F.count(F.lit(1)).alias("order_count"),
     )
+
+
+def _daily_fact_fixture(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """The customer-day fact history behind the daily views: v0 is the
+    STALE fact (orders with ``o_orderkey % 10 = 0`` missing), then a
+    MERGE recomputes every %7 customer from the complete orders with
+    doubled revenue, then a DELETE drops the %5 customers — the %10 /
+    %7 literals of ``lakehouse._stale_and_upd``; keep in lock-step with
+    the oracles. The change feed is materialized because
+    ``q_stream_mv`` drains it as a stream.
+    Returns ``(table_path, v0)``; consumers treat the table as
+    read-only and declare their view ``VERSION AS OF v0``, so the first
+    refresh folds both commits."""
+    got = _DAILY_FACT_CACHE.get(sf_dir)
+    if got and os.path.isdir(got[0]):
+        return got
+    path = os.path.join(scratch_dir("spark_graft_dailyfact", unique=True), "fact")
+    vt = VersionedTable(path, stats_cols=["dt"], change_feed=True)
+    orders = _daily_decimal(spark, sf_dir)
+    v0 = vt.write_full(
+        _daily_agg(orders.filter(F.col("o_orderkey") % 10 != 0)).repartition(4)
+    )
+    upd = (
+        _daily_agg(orders)
+        .filter(F.col("cust_id") % 7 == 0)
+        .withColumn("revenue", (F.col("revenue") * 2).cast(_DECIMAL_REV))
+    )
+    vt.merge_upsert(spark, upd, keys=["cust_id", "dt"])
+    vt.delete_where(spark, "cust_id % 5 = 0")
+    _DAILY_FACT_CACHE[sf_dir] = (path, v0)
+    return path, v0
+
+
+def _mv_session(
+    spark: SparkSession, work: str, mv: str, **bases: str
+) -> LakehouseSession:
+    """A SQL session over the committed ``bases`` (name → table path,
+    read-only) with an empty table for the view ``mv`` under ``work``."""
+    lh = LakehouseSession(spark)
+    for name, path in bases.items():
+        lh.register(name, VersionedTable(path))
+    lh.create(mv, os.path.join(work, "mv"))
+    return lh
+
+
+def _refresh_twice(lh: LakehouseSession, mv: str) -> None:
+    """The first REFRESH must fold the change feed (``incremental``,
+    never a rebuild); a second must be a watermark ``noop``."""
+    r1 = lh.sql(f"REFRESH MATERIALIZED VIEW {mv}").first()
+    if r1["mode"] != "incremental":
+        raise AssertionError(f"expected incremental refresh, got {r1}")
+    r2 = lh.sql(f"REFRESH MATERIALIZED VIEW {mv}").first()
+    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
+        raise AssertionError(f"second refresh not a no-op: {r2}")
+
+
+def _daily_view(
+    spark: SparkSession, sf_dir: str, work: str
+) -> LakehouseSession:
+    """A session whose ``daily_mv`` is declared AS OF version 0 of the
+    daily fact: customers, revenue and orders per day."""
+    path, v0 = _daily_fact_fixture(spark, sf_dir)
+    lh = _mv_session(spark, work, "daily_mv", fact=path)
+    lh.sql(
+        "CREATE MATERIALIZED VIEW daily_mv AS "
+        "SELECT dt, COUNT(*) AS n_custs, SUM(revenue) AS revenue, "
+        "SUM(order_count) AS total_orders "
+        f"FROM fact VERSION AS OF {v0} GROUP BY dt"
+    )
+    return lh
 
 
 INCREMENTAL_MV_ORACLE = """
@@ -296,70 +162,18 @@ INCREMENTAL_MV_ORACLE = """
 
 @demo_query("q_incremental_mv", oracle=INCREMENTAL_MV_ORACLE)
 def q_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized-view maintenance: a daily-revenue MV is
-    built ONCE from version 0 of the versioned fact, then kept current
-    across a MERGE commit and a DELETE commit purely by folding each
-    commit's change feed (``fold_changes_into_aggregate``) — the base
-    table is never re-aggregated. The oracle is the full recompute of
-    the final state: incremental maintenance must be indistinguishable
-    from recomputation. Each refreshed MV generation is persisted to
-    parquet and read back (an MV is a table, and the round-trip pins
-    the fold's schema stability across generations)."""
-    work = scratch_dir("spark_graft_incmv", unique=True)
-    vt = VersionedTable(os.path.join(work, "fact"), stats_cols=["dt"])
-
-    orders = _daily_decimal(spark, sf_dir)
-    stale = _daily_agg(orders.filter(F.col("o_orderkey") % 10 != 0))
-    upd = (
-        _daily_agg(orders)
-        .filter(F.col("cust_id") % 7 == 0)
-        .withColumn(
-            "revenue", (F.col("revenue") * 2).cast(_DECIMAL_REV)
-        )
+    """Incremental materialized-view maintenance: a daily-revenue view
+    is declared AS OF version 0 of the daily fact, then ONE REFRESH
+    folds the MERGE and DELETE commits' change feed into it — the base
+    table is never re-aggregated. Guards: the refresh is incremental
+    and a second refresh is a no-op."""
+    lh = _daily_view(
+        spark, sf_dir, scratch_dir("spark_graft_incmv", unique=True)
     )
-
-    v0 = vt.write_full(stale.repartition(4))
-    versions = [v0]
-    versions.append(vt.merge_upsert(spark, upd, keys=["cust_id", "dt"]))
-    versions.append(vt.delete_where(spark, "cust_id % 5 = 0"))
-
-    def materialize(df: DataFrame, gen: int) -> DataFrame:
-        path = os.path.join(work, f"mv_v{gen}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    mv = materialize(
-        vt.read(spark, v0)
-        .groupBy("dt")
-        .agg(
-            F.sum("revenue").cast("decimal(28,2)").alias("revenue"),
-            F.sum("order_count").alias("total_orders"),
-            F.count(F.lit(1)).alias("n_custs"),
-        ),
-        v0,
-    )
-    for frm, to in zip(versions, versions[1:]):
-        delta = vt.changes(spark, frm, to).select(
-            "_change_type",
-            "dt",
-            "revenue",
-            F.col("order_count").alias("total_orders"),
-        )
-        mv = materialize(
-            fold_changes_into_aggregate(
-                mv,
-                delta,
-                group_keys=["dt"],
-                sum_cols=["revenue", "total_orders"],
-                count_col="n_custs",
-            ),
-            to,
-        )
-    return mv.select(
-        F.col("dt").cast("date").alias("dt"),
-        F.col("n_custs").cast("bigint").alias("n_custs"),
-        F.col("revenue").cast("double").alias("revenue"),
-        F.col("total_orders").cast("bigint").alias("total_orders"),
+    _refresh_twice(lh, "daily_mv")
+    return lh.sql(
+        "SELECT dt, n_custs, CAST(revenue AS DOUBLE) AS revenue, "
+        "total_orders FROM daily_mv"
     )
 
 
@@ -369,86 +183,31 @@ STREAM_MV_ORACLE = INCREMENTAL_MV_ORACLE
 @demo_query("q_stream_mv", oracle=STREAM_MV_ORACLE)
 def q_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental MV maintenance — q_incremental_mv's
-    continuous twin (the Delta Live Tables pattern): the versioned
-    fact's materialized change feed streams out of ``stream_changes``
-    (JVM parquet file stream, exactly-once per file) and every
-    micro-batch folds into the MV via ``foreachBatch`` +
-    ``fold_changes_into_aggregate``. SUM/COUNT folds are commutative
-    and associative, so the result is invariant to how the file stream
-    splits or coalesces commits — no per-commit replay ordering is
-    needed (unlike ``replicate``'s key-level last-write-wins, which
-    must re-read whole commits). The MV starts EMPTY and the feed
-    replays from version 0, so the initial load is just the first fold.
-    ``maxFilesPerTrigger=2`` forces several micro-batches; a guard
-    asserts more than one fold generation actually ran, and the oracle
-    is the full recompute of the final state — a streaming refresh must
-    be indistinguishable from batch recomputation."""
+    continuous twin (the Delta Live Tables pattern): the same view over
+    the same history advances by draining the fact's materialized
+    change feed (``stream_refresh_materialized_view``); every
+    micro-batch folds through the batch REFRESH merge path.
+    ``max_files_per_trigger=1`` splits the feed per commit; a guard
+    asserts at least two micro-batches actually folded, and a batch
+    REFRESH afterwards must be a no-op (the drain left the watermark at
+    head)."""
     work = scratch_dir("spark_graft_streammv", unique=True)
-    vt = VersionedTable(
-        os.path.join(work, "fact"), stats_cols=["dt"], change_feed=True
+    lh = _daily_view(spark, sf_dir, work)
+    n = stream_refresh_materialized_view(
+        spark,
+        lh.table("daily_mv"),
+        lh.table("fact"),
+        os.path.join(work, "ckpt"),
+        max_files_per_trigger=1,
     )
-
-    orders = _daily_decimal(spark, sf_dir)
-    stale = _daily_agg(orders.filter(F.col("o_orderkey") % 10 != 0))
-    upd = (
-        _daily_agg(orders)
-        .filter(F.col("cust_id") % 7 == 0)
-        .withColumn("revenue", (F.col("revenue") * 2).cast(_DECIMAL_REV))
-    )
-    vt.write_full(stale.repartition(4))
-    vt.merge_upsert(spark, upd, keys=["cust_id", "dt"])
-    vt.delete_where(spark, "cust_id % 5 = 0")
-
-    empty_mv = spark.createDataFrame(
-        [], "dt date, revenue decimal(28,2), total_orders bigint, n_custs bigint"
-    )
-    gens: dict[int, str] = {}  # batch_id -> parquet path of that fold
-
-    def fold_batch(batch: DataFrame, batch_id: int) -> None:
-        # foreachBatch is at-least-once: a within-run RETRY of batch N
-        # re-delivers the same batch_id. Idempotency comes from keying
-        # generations by batch_id and folding from the generation
-        # PRECEDING this id — never gens[-1], which on a retry would be
-        # batch N's own (possibly partial) output, double-folding the
-        # delta and overwriting a directory while reading from it.
-        prev = [b for b in gens if b < batch_id]
-        mv = spark.read.parquet(gens[max(prev)]) if prev else empty_mv
-        delta = batch.select(
-            "_change_type",
-            "dt",
-            "revenue",
-            F.col("order_count").alias("total_orders"),
-        )
-        out = fold_changes_into_aggregate(
-            mv,
-            delta,
-            group_keys=["dt"],
-            sum_cols=["revenue", "total_orders"],
-            count_col="n_custs",
-        )
-        path = os.path.join(work, f"mv_gen{batch_id}")
-        out.write.mode("overwrite").parquet(path)
-        gens[batch_id] = path
-
-    q = (
-        vt.stream_changes(spark, max_files_per_trigger=2)
-        .writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(300):
-        q.stop()
-        raise AssertionError("stream did not drain within 300s")
-    if len(gens) < 2:
-        raise AssertionError(
-            f"expected multiple fold generations, got {len(gens)}"
-        )
-    return spark.read.parquet(gens[max(gens)]).select(
-        F.col("dt").cast("date").alias("dt"),
-        F.col("n_custs").cast("bigint").alias("n_custs"),
-        F.col("revenue").cast("double").alias("revenue"),
-        F.col("total_orders").cast("bigint").alias("total_orders"),
+    if n < 2:
+        raise AssertionError(f"expected several folded micro-batches, got {n}")
+    r = lh.sql("REFRESH MATERIALIZED VIEW daily_mv").first()
+    if r["mode"] != "noop":
+        raise AssertionError(f"batch refresh after streaming not noop: {r}")
+    return lh.sql(
+        "SELECT dt, n_custs, CAST(revenue AS DOUBLE) AS revenue, "
+        "total_orders FROM daily_mv"
     )
 
 
@@ -486,27 +245,17 @@ INCREMENTAL_MV_MINMAX_ORACLE = f"""
 
 @demo_query("q_incremental_mv_minmax", oracle=INCREMENTAL_MV_MINMAX_ORACLE)
 def q_incremental_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MIN/MAX materialized-view maintenance with bounded
-    rescan-on-retraction (``fold_changes_into_minmax``): a per-day
-    (min, max, count) price MV is built once from version 0 of an
-    order-grain versioned fact, then kept current across a MERGE
-    commit (doubles every %7 order's price — retracting the OLD value
-    via its update_preimage) and a DELETE commit (drops the %5
-    customer cohort — retracting arbitrary extrema) purely by folding
-    each commit's change feed. Both mutations are confined to the dt
-    horizon >= {_MM_HORIZON} (the reference's late-data shape), so the
-    rescan set is STRUCTURALLY a strict subset of the MV's groups at
-    any scale factor. Deletes that tie-or-beat a group's maintained
-    extremum trigger a recompute of THAT group only (the base read is
-    semi-joined to a broadcast of the triggered keys); insert-side
-    folds are join-free least/greatest. The query FAILS unless at
-    least one fold actually rescanned AND every fold rescanned
-    strictly fewer groups than the MV holds AND every rescanned group
-    lies inside the horizon — the bounded claim, asserted, not
-    assumed. The oracle is the full recompute of the final state."""
+    """MIN/MAX materialized-view maintenance: a per-day (min, max,
+    count) price view over an order-grain fact is declared AS OF
+    version 0, then ONE REFRESH folds a MERGE (doubles every %7 order's
+    price — retracting the OLD value via its update_preimage) and a
+    DELETE (the %5 customer cohort — retracting arbitrary extrema).
+    Both mutations are confined to the dt horizon >= ``_MM_HORIZON``
+    (the reference's late-data shape), so the bounded rescan-on-
+    retraction recomputes only triggered groups inside it; inserts fold
+    join-free as least/greatest. Guards: incremental, then no-op."""
     work = scratch_dir("spark_graft_incmv_minmax", unique=True)
     vt = VersionedTable(os.path.join(work, "fact"), stats_cols=["dt"])
-
     base = _daily_decimal(spark, sf_dir)  # o_orderkey, cust_id, dt, price
     v0 = vt.write_full(
         base.filter(F.col("o_orderkey") % 10 != 0).repartition(4)
@@ -515,71 +264,18 @@ def q_incremental_mv_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderkey") % 7 == 0)
         & (F.col("dt") >= F.lit(_MM_HORIZON))
     ).withColumn("price", (F.col("price") * 2).cast("decimal(12,2)"))
-    versions = [v0]
-    versions.append(vt.merge_upsert(spark, upd, keys=["o_orderkey"]))
-    versions.append(
-        vt.delete_where(
-            spark, f"cust_id % 5 = 0 AND dt >= DATE '{_MM_HORIZON}'"
-        )
+    vt.merge_upsert(spark, upd, keys=["o_orderkey"])
+    vt.delete_where(spark, f"cust_id % 5 = 0 AND dt >= DATE '{_MM_HORIZON}'")
+    lh = _mv_session(spark, work, "price_range", fact=vt.path)
+    lh.sql(
+        "CREATE MATERIALIZED VIEW price_range AS "
+        "SELECT dt, MIN(price) AS min_price, MAX(price) AS max_price, "
+        f"COUNT(*) AS n_orders FROM fact VERSION AS OF {v0} GROUP BY dt"
     )
-
-    def materialize(df: DataFrame, gen) -> DataFrame:
-        path = os.path.join(work, f"mv_{gen}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    mv = materialize(
-        vt.read(spark, v0)
-        .groupBy("dt")
-        .agg(
-            F.min("price").alias("min_price"),
-            F.max("price").alias("max_price"),
-            F.count(F.lit(1)).cast("long").alias("n_orders"),
-        ),
-        v0,
-    )
-    total_rescans = 0
-    for frm, to in zip(versions, versions[1:]):
-        delta = vt.changes(spark, frm, to).select(
-            "_change_type", "dt", "price"
-        )
-        folded, rescan_keys = fold_changes_into_minmax(
-            mv,
-            delta,
-            base=vt.read(spark, to),
-            group_keys=["dt"],
-            val_col="price",
-            min_col="min_price",
-            max_col="max_price",
-            count_col="n_orders",
-        )
-        n_rescanned = rescan_keys.count()
-        n_groups = mv.count()
-        if not n_rescanned < n_groups:
-            raise AssertionError(
-                f"rescan not bounded: {n_rescanned}/{n_groups} groups"
-            )
-        outside = rescan_keys.where(
-            F.col("dt") < F.lit(_MM_HORIZON)
-        ).count()
-        if outside:
-            raise AssertionError(
-                f"{outside} rescanned group(s) outside the mutation "
-                "horizon — the trigger fired where nothing was retracted"
-            )
-        total_rescans += n_rescanned
-        mv = materialize(folded, to)
-    if total_rescans < 1:
-        raise AssertionError(
-            "scenario retracted extrema but nothing rescanned — the "
-            "trigger is broken (a missed retraction would go stale "
-            "silently)"
-        )
-    return mv.select(
-        F.col("dt").cast("date").alias("dt"),
-        F.col("min_price").cast("double").alias("min_price"),
-        F.col("max_price").cast("double").alias("max_price"),
-        F.col("n_orders").cast("bigint").alias("n_orders"),
+    _refresh_twice(lh, "price_range")
+    return lh.sql(
+        "SELECT dt, CAST(min_price AS DOUBLE) AS min_price, "
+        "CAST(max_price AS DOUBLE) AS max_price, n_orders FROM price_range"
     )
 
 
@@ -628,61 +324,23 @@ INCREMENTAL_MV_VAR_ORACLE = """
 @demo_query("q_incremental_mv_var", oracle=INCREMENTAL_MV_VAR_ORACLE)
 def q_incremental_mv_var(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Second-moment MV maintenance: per-day revenue VARIANCE kept
-    current across MERGE and DELETE commits by the SAME SUM/COUNT fold
-    — the squared measure is just another additive column. (n, Σx,
-    Σx²) are each self-maintainable in exact decimal, so the folded
-    moments are bit-identical to a recompute and the variance
-    ((Σx² − (Σx)²/n)/n, computed in double at READ time with one fixed
-    expression order on both engines) matches the oracle's full
-    recompute exactly. The MIN/MAX contrast: those need bounded
-    rescans (q_incremental_mv_minmax); moments never do."""
+    current by the SAME SUM/COUNT fold — the squared measure is just
+    another additive column. (n, Σx, Σx²) are each self-maintainable in
+    exact decimal, so the folded moments are bit-identical to a
+    recompute; the standard deviation is published at READ time from
+    an exact decimal numerator. The MIN/MAX contrast: those need
+    bounded rescans (q_incremental_mv_minmax); moments never do."""
+    path, v0 = _daily_fact_fixture(spark, sf_dir)
     work = scratch_dir("spark_graft_incmv_var", unique=True)
-    vt = VersionedTable(os.path.join(work, "fact"), stats_cols=["dt"])
-
-    orders = _daily_decimal(spark, sf_dir)
-    stale = _daily_agg(orders.filter(F.col("o_orderkey") % 10 != 0))
-    upd = (
-        _daily_agg(orders)
-        .filter(F.col("cust_id") % 7 == 0)
-        .withColumn("revenue", (F.col("revenue") * 2).cast(_DECIMAL_REV))
+    lh = _mv_session(spark, work, "daily_var", fact=path)
+    lh.sql(
+        "CREATE MATERIALIZED VIEW daily_var AS "
+        "SELECT dt, COUNT(*) AS n_custs, SUM(revenue) AS revenue, "
+        "SUM(CAST(revenue * revenue AS DECIMAL(38,4))) AS rev_sq "
+        f"FROM fact VERSION AS OF {v0} GROUP BY dt"
     )
-    v0 = vt.write_full(stale.repartition(4))
-    versions = [v0]
-    versions.append(vt.merge_upsert(spark, upd, keys=["cust_id", "dt"]))
-    versions.append(vt.delete_where(spark, "cust_id % 5 = 0"))
-
-    sq = (F.col("revenue") * F.col("revenue")).cast("decimal(38,4)")
-
-    def materialize(df: DataFrame, gen: int) -> DataFrame:
-        path = os.path.join(work, f"mv_v{gen}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    mv = materialize(
-        vt.read(spark, v0)
-        .select("dt", "revenue", sq.alias("rev_sq"))
-        .groupBy("dt")
-        .agg(
-            F.sum("revenue").cast("decimal(38,2)").alias("revenue"),
-            F.sum("rev_sq").cast("decimal(38,4)").alias("rev_sq"),
-            F.count(F.lit(1)).alias("n_custs"),
-        ),
-        v0,
-    )
-    for frm, to in zip(versions, versions[1:]):
-        delta = vt.changes(spark, frm, to).select(
-            "_change_type", "dt", "revenue", sq.alias("rev_sq")
-        )
-        mv = materialize(
-            fold_changes_into_aggregate(
-                mv,
-                delta,
-                group_keys=["dt"],
-                sum_cols=["revenue", "rev_sq"],
-                count_col="n_custs",
-            ),
-            to,
-        )
+    _refresh_twice(lh, "daily_var")
+    mv = lh.sql("SELECT dt, n_custs, revenue, rev_sq FROM daily_var")
     # variance numerator n*Σx² − (Σx)² computed EXACTLY in decimal —
     # the double form (Σx² − (Σx)²/n)/n suffers catastrophic
     # cancellation whose last-ulp noise differs across engines; with an
@@ -702,93 +360,6 @@ def q_incremental_mv_var(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sqrt(var_num) / F.col("n_custs").cast("double"), 6
         ).alias("rev_std"),
-    )
-
-
-def join_signed_delta(
-    a_old: DataFrame,
-    da: DataFrame | None,
-    b_old: DataFrame,
-    db: DataFrame | None,
-    on: list[str],
-) -> DataFrame:
-    """Change feed of the JOIN VIEW ``A ⋈ B`` from each base table's
-    own change feed — the classic bilinear delta rule (DBSP / pg_ivm;
-    the identity every incremental view maintenance engine uses):
-
-        Δ(A ⋈ B) = ΔA ⋈ B₀  +  A₀ ⋈ ΔB  +  ΔA ⋈ ΔB
-
-    where A₀/B₀ are the PRE-change snapshots and each delta is a signed
-    multiset (``insert``/``update_postimage`` count +1, ``delete``/
-    ``update_preimage`` −1; an update is algebraically a delete+insert
-    pair, so signs multiply through the cross term). ``da``/``db`` are
-    ``VersionedTable.changes`` frames carrying exactly their side's
-    columns plus ``_change_type``; pass ``None`` for a side that did
-    not change and its terms vanish. Returns the joined rows
-    (``on`` keys + both sides' payload columns) with a ``_change_type``
-    of ``insert``/``delete``, ready for ``fold_changes_into_aggregate``
-    — so a JOIN-view aggregate MV refreshes without ever re-running the
-    join over the full base tables.
-
-    Why this is the 100 TB shape: the only full-snapshot inputs are the
-    two mixed terms, and each is LEFT SEMI pruned to the other side's
-    delta keys BEFORE its join — ``A₀ ⋈ ΔB`` reads only the A rows
-    whose join key appears in the (churn-sized) dim delta, which
-    partition/stats pruning turns into a partial scan; no term is ever
-    ``|A| × |B|``. AQE broadcasts the delta sides when they fit (no
-    forced hint: a delta CAN be large after a bulk backfill, and the
-    plan must survive that). Multiplicities are exact multiset algebra:
-    one +1 fact-delta row matching k dim rows yields k +1 joined rows.
-    """
-    a_cols = [c for c in a_old.columns if c not in on]
-    b_cols = [c for c in b_old.columns if c not in on]
-    overlap = set(a_cols) & set(b_cols)
-    if overlap:
-        raise ValueError(
-            f"join_signed_delta: non-key columns collide: {sorted(overlap)}"
-            " — alias one side before differencing"
-        )
-    for side, delta, base in (("da", da, a_old), ("db", db, b_old)):
-        if delta is None:
-            continue
-        want = set(base.columns) | {"_change_type"}
-        got = set(delta.columns)
-        if got != want:
-            raise ValueError(
-                f"join_signed_delta: {side} columns {sorted(got)} != "
-                f"base columns + _change_type {sorted(want)}"
-            )
-    sign = F.when(F.col("_change_type").isin(*_ADDITIVE), 1).otherwise(-1)
-    out = on + a_cols + b_cols
-    terms: list[DataFrame] = []
-    if da is not None:
-        da_s = da.select(*on, *a_cols, sign.alias("__sa"))
-        b_pruned = b_old.join(da_s.select(*on).distinct(), on, "left_semi")
-        terms.append(
-            da_s.join(b_pruned, on).select(*out, F.col("__sa").alias("__sign"))
-        )
-    if db is not None:
-        db_s = db.select(*on, *b_cols, sign.alias("__sb"))
-        a_pruned = a_old.join(db_s.select(*on).distinct(), on, "left_semi")
-        terms.append(
-            a_pruned.join(db_s, on).select(*out, F.col("__sb").alias("__sign"))
-        )
-    if da is not None and db is not None:
-        da_s = da.select(*on, *a_cols, sign.alias("__sa"))
-        db_s = db.select(*on, *b_cols, sign.alias("__sb"))
-        terms.append(
-            da_s.join(db_s, on).select(
-                *out, (F.col("__sa") * F.col("__sb")).alias("__sign")
-            )
-        )
-    if not terms:
-        raise ValueError("join_signed_delta: both deltas are None")
-    signed = reduce(DataFrame.unionByName, terms)
-    return signed.select(
-        *out,
-        F.when(F.col("__sign") > 0, F.lit("insert"))
-        .otherwise(F.lit("delete"))
-        .alias("_change_type"),
     )
 
 
@@ -817,108 +388,31 @@ INCREMENTAL_MV_JOIN_ORACLE = """
 
 @demo_query("q_incremental_mv_join", oracle=INCREMENTAL_MV_JOIN_ORACLE)
 def q_incremental_mv_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JOIN-VIEW materialized-view maintenance: a per-nation revenue MV
-    over ``fact ⋈ dim`` is built ONCE, then kept current while BOTH
-    base tables mutate — the fact takes a MERGE (inserts the %10
-    orders, doubles the %7 prices) then a DELETE (%5 customers), and
-    the dim takes an UPDATE that MOVES every %3 customer to a new
-    nation — using ``join_signed_delta``'s bilinear rule; the join is
-    never recomputed over the full tables. Refresh 2 changes BOTH
-    sides in one step, so all three delta terms fire (including the
-    ΔA ⋈ ΔB correction for customers deleted from the fact AND moved
-    in the dim — dropping it double-subtracts exactly those). The
-    oracle is the full recompute of the final join: incremental
-    maintenance must be indistinguishable from it, bit-exact in
-    decimal. Each MV generation round-trips through parquet (an MV is
-    a table)."""
+    """JOIN-VIEW materialized-view maintenance: a per-nation revenue
+    view over ``fact ⋈ dim`` is declared AS OF the fact's pre-mutation
+    version and the dim's head, so ONE REFRESH folds the fact's MERGE
+    (inserts the %10 orders, doubles the %7 prices) and DELETE (%5
+    customers) through the bilinear join delta with only the ΔA ⋈ B₀
+    term live; the join is never recomputed over the full tables. It
+    complements ``q_materialized_view_join``, whose refresh changes
+    BOTH sides. Shared read-only fixture (``_mv_join_fixture``).
+    Guards: incremental, then no-op."""
+    from .lakehouse import _mv_join_fixture
+
+    fpath, dpath, fv0, _ = _mv_join_fixture(spark, sf_dir)
     work = scratch_dir("spark_graft_incmv_join", unique=True)
-    fact_vt = VersionedTable(os.path.join(work, "fact"), stats_cols=["cust_id"])
-    dim_vt = VersionedTable(os.path.join(work, "dim"), stats_cols=["cust_id"])
-
-    base = _daily_decimal(spark, sf_dir).select("o_orderkey", "cust_id", "price")
-    v0 = fact_vt.write_full(
-        base.filter(F.col("o_orderkey") % 10 != 0).repartition(4)
+    lh = _mv_session(spark, work, "nation_rev", fact=fpath, dim=dpath)
+    dim_head = lh.table("dim").latest_version()
+    lh.sql(
+        "CREATE MATERIALIZED VIEW nation_rev AS "
+        "SELECT nation, SUM(price) AS revenue, COUNT(*) AS n_lines "
+        f"FROM fact VERSION AS OF {fv0} "
+        f"JOIN dim VERSION AS OF {dim_head} USING (cust_id) GROUP BY nation"
     )
-    dim = (
-        load_table(spark, sf_dir, "customer")
-        .select(
-            F.col("c_custkey").alias("cust_id"),
-            F.col("c_nationkey").cast("int").alias("nation"),
-        )
-    )
-    w0 = dim_vt.write_full(dim.repartition(2))
-
-    # fact commit 1: MERGE — %10 rows insert, %7 rows double their price
-    src = base.filter(
-        (F.col("o_orderkey") % 10 == 0) | (F.col("o_orderkey") % 7 == 0)
-    ).withColumn(
-        "price",
-        F.when(
-            F.col("o_orderkey") % 7 == 0, (F.col("price") * 2)
-        )
-        .otherwise(F.col("price"))
-        .cast("decimal(12,2)"),
-    )
-    v1 = fact_vt.merge_upsert(spark, src, keys=["o_orderkey"])
-    # fact commit 2 + dim commit 1 land in the SAME refresh window
-    v2 = fact_vt.delete_where(spark, "cust_id % 5 = 0")
-    w1 = dim_vt.update_where(
-        spark, "cust_id % 3 = 0", {"nation": "(nation + 1) % 25"}
-    )
-
-    def materialize(df: DataFrame, gen: str) -> DataFrame:
-        path = os.path.join(work, f"mv_{gen}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    def to_fold_delta(joined: DataFrame) -> DataFrame:
-        return joined.select("_change_type", "nation", "price")
-
-    mv = materialize(
-        fact_vt.read(spark, v0)
-        .join(dim_vt.read(spark, w0), "cust_id")
-        .groupBy("nation")
-        .agg(
-            F.sum("price").cast("decimal(28,2)").alias("price"),
-            F.count(F.lit(1)).alias("n_lines"),
-        ),
-        "g0",
-    )
-    # refresh 1: only the fact changed — two of three terms vanish
-    d1 = join_signed_delta(
-        a_old=fact_vt.read(spark, v0),
-        da=fact_vt.changes(spark, v0, v1),
-        b_old=dim_vt.read(spark, w0),
-        db=None,
-        on=["cust_id"],
-    )
-    mv = materialize(
-        fold_changes_into_aggregate(
-            mv, to_fold_delta(d1), group_keys=["nation"],
-            sum_cols=["price"], count_col="n_lines",
-        ),
-        "g1",
-    )
-    # refresh 2: BOTH sides changed — all three terms, A₀/B₀ at the
-    # pre-refresh snapshots (v1, w0)
-    d2 = join_signed_delta(
-        a_old=fact_vt.read(spark, v1),
-        da=fact_vt.changes(spark, v1, v2),
-        b_old=dim_vt.read(spark, w0),
-        db=dim_vt.changes(spark, w0, w1),
-        on=["cust_id"],
-    )
-    mv = materialize(
-        fold_changes_into_aggregate(
-            mv, to_fold_delta(d2), group_keys=["nation"],
-            sum_cols=["price"], count_col="n_lines",
-        ),
-        "g2",
-    )
-    return mv.select(
-        F.col("nation").cast("int").alias("nation"),
-        F.col("price").cast("double").alias("revenue"),
-        F.col("n_lines").cast("bigint").alias("n_lines"),
+    _refresh_twice(lh, "nation_rev")
+    return lh.sql(
+        "SELECT nation, CAST(revenue AS DOUBLE) AS revenue, n_lines "
+        "FROM nation_rev"
     )
 
 
@@ -939,70 +433,27 @@ def q_incremental_mv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT) materialized-view maintenance. A distinct count
     is NOT self-maintainable from (group, count) alone — a delete only
     lowers the count if it removed the group's LAST occurrence of that
-    value — so the standard construction (pg_ivm / Materialize) keeps
-    an auxiliary SUPPORT table keyed by (group, value) holding each
-    value's multiplicity, maintained by the SAME signed fold as any
-    SUM/COUNT MV (``fold_changes_into_aggregate`` with the value
-    promoted into the grouping key and no sum columns). A support row
-    retiring at multiplicity zero IS the distinct-count decrement; the
-    published per-day MV is a small aggregate over the support table
-    (|support| = Σ per-group distinct values — churn-proportional to
-    maintain, never a base-table rescan).
+    value — so the engine keeps a hidden SUPPORT table per distinct
+    column (pg_ivm / Materialize construction: one row per (group,
+    value) with its multiplicity, maintained by the same signed fold;
+    a support row retiring at multiplicity zero IS the decrement).
 
-    The scenario is adversarial for exactly the non-self-maintainable
-    cases: the MERGE's update pairs change a measure but not the
-    (dt, cust) pair — preimage/postimage must cancel in the support
-    fold and leave every distinct count untouched — and the DELETE
-    removes customers with MANY orders on the same day, where the
-    naive count-down-per-delete over-decrements. Oracle = full
-    COUNT(DISTINCT) recompute of the final state; n_rows doubles as
-    the plain-count cross-check from the same support table."""
+    The shared fixture (``_mv_fact_fixture``) is adversarial for
+    exactly the non-self-maintainable cases: its UPDATE changes a
+    measure but not the (dt, cust) pair — preimage/postimage must
+    cancel in the support fold — and its DELETE removes customers with
+    MANY orders on the same day, where a naive count-down-per-delete
+    over-decrements. n_rows doubles as the plain-count cross-check.
+    Guards: incremental, then no-op."""
+    from .lakehouse import _mv_fact_fixture
+
+    path, v0 = _mv_fact_fixture(spark, sf_dir)
     work = scratch_dir("spark_graft_incmv_distinct", unique=True)
-    vt = VersionedTable(os.path.join(work, "fact"), stats_cols=["dt"])
-
-    base = _daily_decimal(spark, sf_dir)  # o_orderkey, cust_id, dt, price
-    v0 = vt.write_full(
-        base.filter(F.col("o_orderkey") % 10 != 0).repartition(4)
+    lh = _mv_session(spark, work, "daily_custs", fact=path)
+    lh.sql(
+        "CREATE MATERIALIZED VIEW daily_custs AS "
+        "SELECT dt, COUNT(DISTINCT cust_id) AS n_custs, COUNT(*) AS n_rows "
+        f"FROM fact VERSION AS OF {v0} GROUP BY dt"
     )
-    src = base.filter(
-        (F.col("o_orderkey") % 10 == 0) | (F.col("o_orderkey") % 7 == 0)
-    ).withColumn(
-        "price",
-        F.when(F.col("o_orderkey") % 7 == 0, F.col("price") * 2)
-        .otherwise(F.col("price"))
-        .cast("decimal(12,2)"),
-    )
-    versions = [v0]
-    versions.append(vt.merge_upsert(spark, src, keys=["o_orderkey"]))
-    versions.append(vt.delete_where(spark, "cust_id % 5 = 0"))
-
-    def materialize(df: DataFrame, gen: int) -> DataFrame:
-        path = os.path.join(work, f"support_v{gen}")
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
-    # support table: one row per (dt, cust_id) with its multiplicity
-    support = materialize(
-        vt.read(spark, v0)
-        .groupBy("dt", "cust_id")
-        .agg(F.count(F.lit(1)).alias("mult")),
-        v0,
-    )
-    for frm, to in zip(versions, versions[1:]):
-        delta = vt.changes(spark, frm, to).select(
-            "_change_type", "dt", "cust_id"
-        )
-        support = materialize(
-            fold_changes_into_aggregate(
-                support,
-                delta,
-                group_keys=["dt", "cust_id"],
-                sum_cols=[],
-                count_col="mult",
-            ),
-            to,
-        )
-    return support.groupBy("dt").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_custs"),
-        F.sum("mult").cast("bigint").alias("n_rows"),
-    ).select(F.col("dt").cast("date").alias("dt"), "n_custs", "n_rows")
+    _refresh_twice(lh, "daily_custs")
+    return lh.sql("SELECT dt, n_custs, n_rows FROM daily_custs")

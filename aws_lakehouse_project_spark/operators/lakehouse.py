@@ -1303,7 +1303,10 @@ def q_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     work = scratch_dir("spark_graft_streammerge", unique=True)
     drops = os.path.join(work, "drops")
     os.makedirs(drops)
-    events = load_table(spark, sf_dir, "events")
+    # an event without a time fits no daily window (``window()`` drops
+    # it), so it belongs in no drop; ``otherwise(2)`` below would
+    # stage it into the last one
+    events = load_table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     # three deterministic chronological drops (fixture staging, same
     # device as the other streaming demos), one file each
     import datetime as _dt
@@ -2799,8 +2802,8 @@ def q_materialized_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the bilinear rule (all three delta terms fire, including the
     ΔA⋈ΔB correction for customers deleted AND moved). Guards assert
     the refresh was incremental and idempotent. Oracle (shared with
-    the Python-API twin q_incremental_mv_join) = full recompute of the
-    final join. Both base histories come from the JOIN twins' shared
+    q_incremental_mv_join, whose refresh is fact-only) = full recompute
+    of the final join. Both base histories come from the JOIN twins' shared
     read-only fixture (``_mv_join_fixture``); the view is declared
     VERSION AS OF each base's pre-mutation version."""
     from ..plans.lakehouse_sql import LakehouseSession

@@ -7,9 +7,12 @@ lakehouses document (Databricks materialized views, pg_ivm,
 Materialize): a SQL-declared aggregate whose REFRESH folds the base
 table's change feed instead of recomputing — built on the pieces that
 already exist here (``VersionedTable.changes`` for churn-proportional
-deltas, ``operators/incremental.py``'s signed-fold algebra,
+deltas, the signed-fold algebra below — ``insert``/``update_postimage``
+rows add, ``delete``/``update_preimage`` rows subtract — and
 ``merge_apply`` for file-granular CoW commits of only the touched
-groups).
+groups). It is the package's only incremental-view engine: the
+``q_incremental_mv*``, ``q_stream_mv`` and ``q_materialized_view*``
+demos all run on it.
 
 Contract:
 
@@ -33,8 +36,8 @@ Contract:
   churn scan.
 - Supported aggregates: ``SUM(<expr>) AS alias`` / ``COUNT(*) AS
   alias`` (self-maintainable: pure fold) and ``MIN/MAX(<expr>) AS
-  alias`` with the BOUNDED rescan-on-retraction doctrine of
-  ``operators/incremental.py::fold_changes_into_minmax``: inserts fold
+  alias`` with the BOUNDED rescan-on-retraction doctrine
+  (``_merge_nets``): inserts fold
   join-free via least/greatest; only groups where a DELETED value
   ties-or-beats the maintained extremum are recomputed from the base —
   semi-joined down to exactly those keys, one rescan covering every
@@ -57,9 +60,7 @@ Contract:
   silently never fold that group), and at refresh if one appears in
   the delta. The churn-keyed equi-joins underneath (``merge_apply``)
   use SQL equality, where NULL never matches. Loud refusal beats a
-  silently stale MV; the Python fold
-  (``fold_changes_into_aggregate``) handles NULL keys null-safely for
-  callers who need them.
+  silently stale MV.
 - If VACUUM reclaimed the watermark version's history,
   ``VacuumedVersionError`` propagates — ``REFRESH ... FULL`` rebuilds
   from the current snapshot and re-arms the watermark (COUNT(DISTINCT)
@@ -89,7 +90,7 @@ Contract:
   b USING (k) GROUP BY ...`` maintains an aggregate over a two-table
   equi-join with ONE watermark per base; REFRESH builds the join's own
   change feed from both bases' CDFs via the bilinear rule
-  (``operators/incremental.py::join_signed_delta`` — Δ(A⋈B) = ΔA⋈B₀ +
+  (``join_signed_delta`` — Δ(A⋈B) = ΔA⋈B₀ +
   A₀⋈ΔB + ΔA⋈ΔB, mixed terms semi-pruned to the other side's delta
   keys) and folds it through the SAME merge path as single-table
   views. MIN/MAX on a join view refreshes with the BOUNDED JOIN-SLICE
@@ -338,8 +339,7 @@ def _null_key_guard(df: DataFrame, keys: list[str], where: str) -> None:
         raise ValueError(
             f"materialized view {where}: NULL group key encountered — "
             "NULL keys don't survive the equality joins incremental "
-            "maintenance uses; filter them in the base table or use "
-            "fold_changes_into_aggregate directly"
+            "maintenance uses; filter them in the base table"
         )
 
 
@@ -437,14 +437,15 @@ def support_tables(mv: VersionedTable) -> list[VersionedTable]:
     return out
 
 
-def _support_wm(sup: VersionedTable) -> int:
+def _support_wm(sup: VersionedTable) -> dict:
     """The support table's own base-version watermark (``latest_meta``
     walk, same doctrine as ``definition``): stored SEPARATELY from the
     MV's so a crash between the support fold and the MV commit re-runs
-    as a no-op support fold, never a double fold."""
+    as a no-op support fold, never a double fold. ``{"watermark": v}``,
+    plus ``"watermark_b"`` for JOIN views."""
     m = sup.latest_meta(_SUPPORT_META)
     if m:
-        return int(m["watermark"])
+        return {k: int(v) for k, v in m.items()}
     raise ValueError(
         f"{sup.path}: no {_SUPPORT_META!r} watermark in any commit meta"
     )
@@ -667,34 +668,6 @@ def create_materialized_join_view(
     return _build_and_guard(spark, joined, mv, d, "create")
 
 
-def _nets(
-    delta: DataFrame, keys: list[str], sums: list[list[str]], cnt: str
-) -> DataFrame:
-    """Per-group signed nets of one change feed: sum deltas, non-null
-    value-count deltas, and the row-count delta."""
-    add = F.col("_change_type").isin(*_ADDITIVE)
-    return (
-        delta.select(
-            *keys,
-            F.when(add, 1).otherwise(-1).alias("__s"),
-            *[F.expr(e).alias(a) for e, a in sums],
-        )
-        .groupBy(*keys)
-        .agg(
-            *[F.sum(F.col(a) * F.col("__s")).alias(a) for _, a in sums],
-            *[
-                F.sum(
-                    F.when(F.col(a).isNotNull(), F.col("__s")).otherwise(0)
-                )
-                .cast("long")
-                .alias(_nn(a))
-                for _, a in sums
-            ],
-            F.sum("__s").cast("long").alias(cnt),
-        )
-    )
-
-
 def _nets_with_extrema(
     delta: DataFrame,
     keys: list[str],
@@ -703,11 +676,14 @@ def _nets_with_extrema(
     maxs: list[list[str]],
     cnt: str,
 ) -> DataFrame:
-    """Per-group signed nets of one change feed INCLUDING the MIN/MAX
-    maintenance columns: insert-side fold candidates (``__ins__a``) and
-    deleted-side retraction probes (``__del__a``) per extremum column.
-    Shared by single-table refresh (base CDF) and JOIN-view refresh
-    (bilinear join delta) — both feeds carry ``_change_type``."""
+    """Per-group signed nets of one change feed: sum deltas, non-null
+    value-count deltas and the row-count delta, plus the MIN/MAX
+    maintenance columns — insert-side fold candidates (``__ins__a``) and
+    deleted-side retraction probes (``__del__a``) per extremum column
+    (none when ``mins``/``maxs`` are empty). The one nets builder of
+    every fold: single-table and streaming refresh (base CDF), JOIN-view
+    refresh (bilinear join delta) and COUNT(DISTINCT) support folds —
+    all feeds carry ``_change_type``."""
     add = F.col("_change_type").isin(*_ADDITIVE)
     return (
         delta.select(
@@ -849,7 +825,7 @@ def _merge_nets(
         return _commit_changes(changes_df)
     # MIN/MAX path: a group needs a rescan only if it SURVIVES and a
     # deleted value ties-or-beats its maintained extremum (the bounded
-    # doctrine of fold_changes_into_minmax); dead groups delete,
+    # rescan-on-retraction doctrine); dead groups delete,
     # fold-only groups take least/greatest join-free. NULL deleted
     # values never probe (MIN/MAX ignore NULLs). A group ABSENT from
     # the stored MV that still carries a delete-side probe must ALSO
@@ -914,6 +890,65 @@ def _merge_nets(
         pre.unpersist()
 
 
+def _fold_supports(
+    spark: SparkSession,
+    mv: VersionedTable,
+    d: dict,
+    delta: DataFrame,
+    touched: DataFrame,
+    mv_wm: dict,
+    head_wm: dict,
+    lag_delta,
+) -> DataFrame:
+    """Advance every COUNT(DISTINCT) support table to ``head_wm`` and
+    return ``touched`` (the refresh's touched group keys) with one
+    ``__dist__<alias>`` recount per distinct column — ONE support fold
+    shared by single-table and JOIN refreshes. A support table at the
+    MV's own watermark ``mv_wm`` folds the refresh's ``delta`` (the
+    normal case); one left ahead of it by a crash between the support
+    fold and the MV commit re-folds only ``lag_delta(support_wm)``, the
+    feed from its own watermark; one already at ``head_wm`` folds
+    nothing. Watermarks are ``_support_wm``-shaped dicts."""
+    keys = d["group_keys"]
+    dist_df = touched
+    for e, a in d["distincts"]:
+        sup = _support_table(mv, a)
+        s_wm = _support_wm(sup)
+        if s_wm != head_wm:
+            sdelta = delta if s_wm == mv_wm else lag_delta(s_wm)
+            snets = _nets_with_extrema(
+                sdelta.where(F.expr(e).isNotNull()).select(
+                    "_change_type", *keys, F.expr(e).alias("__dv")
+                ),
+                [*keys, "__dv"],
+                [],
+                [],
+                [],
+                "__mult",
+            )
+            _merge_nets(
+                spark,
+                sup,
+                snets,
+                [*keys, "__dv"],
+                [],
+                "__mult",
+                head_meta={_SUPPORT_META: head_wm},
+            )
+        # published count = surviving support rows per touched group
+        # (support is key-pruned: cost ∝ churned groups' distinct
+        # values, never the base)
+        dist_df = dist_df.join(
+            sup.read(spark)
+            .join(touched, keys, "left_semi")
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)).cast("long").alias(f"__dist__{a}")),
+            keys,
+            "left",
+        )
+    return dist_df
+
+
 def refresh_materialized_view(
     spark: SparkSession,
     mv: VersionedTable,
@@ -975,55 +1010,21 @@ def refresh_materialized_view(
         dist_df = None
         if dists:
             touched = nets.select(*keys).distinct().persist()
-            dist_df = touched
-            for e, a in dists:
-                sup = _support_table(mv, a)
-                s_wm = _support_wm(sup)
-                if s_wm < head:
-                    # normal case reuses the already-built delta; a
-                    # crash between support fold and MV commit leaves
-                    # s_wm ahead of wm — re-fold only the lag
-                    sdelta = (
-                        delta if s_wm == wm
-                        else _with_key_exprs(
-                            _with_where(base.changes(spark, s_wm, head), d),
-                            d,
-                        )
-                    )
-                    snets = _nets(
-                        sdelta.where(F.expr(e).isNotNull()).select(
-                            "_change_type",
-                            *keys,
-                            F.expr(e).alias("__dv"),
-                        ),
-                        [*keys, "__dv"],
-                        [],
-                        "__mult",
-                    )
-                    _merge_nets(
-                        spark,
-                        sup,
-                        snets,
-                        [*keys, "__dv"],
-                        [],
-                        "__mult",
-                        head_meta={_SUPPORT_META: {"watermark": head}},
-                    )
-                # published count = surviving support rows per touched
-                # group (support is key-pruned: cost ∝ churned groups'
-                # distinct values, never the base)
-                dist_df = dist_df.join(
-                    sup.read(spark)
-                    .join(touched, keys, "left_semi")
-                    .groupBy(*keys)
-                    .agg(
-                        F.count(F.lit(1))
-                        .cast("long")
-                        .alias(f"__dist__{a}")
+            dist_df = _fold_supports(
+                spark,
+                mv,
+                d,
+                delta,
+                touched,
+                mv_wm={"watermark": wm},
+                head_wm={"watermark": head},
+                lag_delta=lambda s_wm: _with_key_exprs(
+                    _with_where(
+                        base.changes(spark, s_wm["watermark"], head), d
                     ),
-                    keys,
-                    "left",
-                )
+                    d,
+                ),
+            )
         # No forced broadcast in the rescan semi-join: a bulk delete can
         # trigger millions of groups; AQE picks broadcast when trig_keys
         # is actually small (same doctrine as join_signed_delta's
@@ -1052,6 +1053,91 @@ def refresh_materialized_view(
     return v, "incremental"
 
 
+def join_signed_delta(
+    a_old: DataFrame,
+    da: DataFrame | None,
+    b_old: DataFrame,
+    db: DataFrame | None,
+    on: list[str],
+) -> DataFrame:
+    """Change feed of the JOIN VIEW ``A ⋈ B`` from each base table's
+    own change feed — the classic bilinear delta rule (DBSP / pg_ivm;
+    the identity every incremental view maintenance engine uses):
+
+        Δ(A ⋈ B) = ΔA ⋈ B₀  +  A₀ ⋈ ΔB  +  ΔA ⋈ ΔB
+
+    where A₀/B₀ are the PRE-change snapshots and each delta is a signed
+    multiset (``insert``/``update_postimage`` count +1, ``delete``/
+    ``update_preimage`` −1; an update is algebraically a delete+insert
+    pair, so signs multiply through the cross term). ``da``/``db`` are
+    ``VersionedTable.changes`` frames carrying exactly their side's
+    columns plus ``_change_type``; pass ``None`` for a side that did
+    not change and its terms vanish. Returns the joined rows
+    (``on`` keys + both sides' payload columns) with a ``_change_type``
+    of ``insert``/``delete``, ready for the signed fold
+    (``_nets_with_extrema``) — so a JOIN-view aggregate MV refreshes
+    without ever re-running the join over the full base tables.
+
+    Why this is the 100 TB shape: the only full-snapshot inputs are the
+    two mixed terms, and each is LEFT SEMI pruned to the other side's
+    delta keys BEFORE its join — ``A₀ ⋈ ΔB`` reads only the A rows
+    whose join key appears in the (churn-sized) dim delta, which
+    partition/stats pruning turns into a partial scan; no term is ever
+    ``|A| × |B|``. AQE broadcasts the delta sides when they fit (no
+    forced hint: a delta CAN be large after a bulk backfill, and the
+    plan must survive that). Multiplicities are exact multiset algebra:
+    one +1 fact-delta row matching k dim rows yields k +1 joined rows.
+    """
+    a_cols = [c for c in a_old.columns if c not in on]
+    b_cols = [c for c in b_old.columns if c not in on]
+    overlap = set(a_cols) & set(b_cols)
+    if overlap:
+        raise ValueError(
+            f"join_signed_delta: non-key columns collide: {sorted(overlap)}"
+            " — alias one side before differencing"
+        )
+    for side, delta, base in (("da", da, a_old), ("db", db, b_old)):
+        if delta is None:
+            continue
+        want = set(base.columns) | {"_change_type"}
+        got = set(delta.columns)
+        if got != want:
+            raise ValueError(
+                f"join_signed_delta: {side} columns {sorted(got)} != "
+                f"base columns + _change_type {sorted(want)}"
+            )
+    sign = F.when(F.col("_change_type").isin(*_ADDITIVE), 1).otherwise(-1)
+    out = on + a_cols + b_cols
+    terms: list[DataFrame] = []
+    if da is not None:
+        da_s = da.select(*on, *a_cols, sign.alias("__sa"))
+        b_pruned = b_old.join(da_s.select(*on).distinct(), on, "left_semi")
+        terms.append(
+            da_s.join(b_pruned, on).select(*out, F.col("__sa").alias("__sign"))
+        )
+    if db is not None:
+        db_s = db.select(*on, *b_cols, sign.alias("__sb"))
+        a_pruned = a_old.join(db_s.select(*on).distinct(), on, "left_semi")
+        terms.append(
+            a_pruned.join(db_s, on).select(*out, F.col("__sb").alias("__sign"))
+        )
+    if da is not None and db is not None:
+        terms.append(
+            da_s.join(db_s, on).select(
+                *out, (F.col("__sa") * F.col("__sb")).alias("__sign")
+            )
+        )
+    if not terms:
+        raise ValueError("join_signed_delta: both deltas are None")
+    signed = reduce(DataFrame.unionByName, terms)
+    return signed.select(
+        *out,
+        F.when(F.col("__sign") > 0, F.lit("insert"))
+        .otherwise(F.lit("delete"))
+        .alias("_change_type"),
+    )
+
+
 def refresh_materialized_join_view(
     spark: SparkSession,
     mv: VersionedTable,
@@ -1069,8 +1155,6 @@ def refresh_materialized_join_view(
     side carries (and the un-pruned side through the pruned side's
     join keys), so only the triggered groups' join slices recompute —
     never ``A ⋈ B`` over the full bases."""
-    from ..operators.incremental import join_signed_delta
-
     d = definition(mv)
     keys, cnt = d["group_keys"], d["count_col"]
     sums = _eff_sums(d)
@@ -1092,17 +1176,25 @@ def refresh_materialized_join_view(
     wa, wb = d["base_version"], d["base_b_version"]
     if (ha, hb) == (wa, wb):
         return mv.latest_version(), "noop"
-    da = a.changes(spark, wa, ha) if ha != wa else None
-    db = b.changes(spark, wb, hb) if hb != wb else None
-    delta = _with_key_exprs(
-        _with_where(
-            join_signed_delta(
-                a.read(spark, wa), da, b.read(spark, wb), db, on=on
+
+    def _delta_since(va: int, vb: int) -> DataFrame:
+        """The join's signed change feed from base versions (va, vb) to
+        the heads (ha, hb)."""
+        return _with_key_exprs(
+            _with_where(
+                join_signed_delta(
+                    a.read(spark, va),
+                    a.changes(spark, va, ha) if ha != va else None,
+                    b.read(spark, vb),
+                    b.changes(spark, vb, hb) if hb != vb else None,
+                    on=on,
+                ),
+                d,
             ),
             d,
-        ),
-        d,
-    )
+        )
+
+    delta = _delta_since(wa, wb)
     dists = d.get("distincts", [])
     if dists:
         # the bilinear delta feeds both the MV nets and each distinct
@@ -1146,74 +1238,18 @@ def refresh_materialized_join_view(
         dist_df = None
         if dists:
             touched = nets.select(*keys).distinct().persist()
-            dist_df = touched
-            for e, al in dists:
-                sup = _support_table(mv, al)
-                sm = sup.latest_meta(_SUPPORT_META)
-                s_wa = int(sm["watermark"])
-                s_wb = int(sm["watermark_b"])
-                if (s_wa, s_wb) != (ha, hb):
-                    # normal case reuses the already-built delta; a
-                    # crash between support fold and MV commit leaves
-                    # the support ahead — rebuild ONLY the lag window's
-                    # bilinear delta from the support's own watermarks
-                    sdelta = (
-                        delta
-                        if (s_wa, s_wb) == (wa, wb)
-                        else _with_key_exprs(
-                            _with_where(
-                                join_signed_delta(
-                                    a.read(spark, s_wa),
-                                    a.changes(spark, s_wa, ha)
-                                    if ha != s_wa
-                                    else None,
-                                    b.read(spark, s_wb),
-                                    b.changes(spark, s_wb, hb)
-                                    if hb != s_wb
-                                    else None,
-                                    on=on,
-                                ),
-                                d,
-                            ),
-                            d,
-                        )
-                    )
-                    snets = _nets(
-                        sdelta.where(F.expr(e).isNotNull()).select(
-                            "_change_type",
-                            *keys,
-                            F.expr(e).alias("__dv"),
-                        ),
-                        [*keys, "__dv"],
-                        [],
-                        "__mult",
-                    )
-                    _merge_nets(
-                        spark,
-                        sup,
-                        snets,
-                        [*keys, "__dv"],
-                        [],
-                        "__mult",
-                        head_meta={
-                            _SUPPORT_META: {
-                                "watermark": ha,
-                                "watermark_b": hb,
-                            }
-                        },
-                    )
-                dist_df = dist_df.join(
-                    sup.read(spark)
-                    .join(touched, keys, "left_semi")
-                    .groupBy(*keys)
-                    .agg(
-                        F.count(F.lit(1))
-                        .cast("long")
-                        .alias(f"__dist__{al}")
-                    ),
-                    keys,
-                    "left",
-                )
+            dist_df = _fold_supports(
+                spark,
+                mv,
+                d,
+                delta,
+                touched,
+                mv_wm={"watermark": wa, "watermark_b": wb},
+                head_wm={"watermark": ha, "watermark_b": hb},
+                lag_delta=lambda s_wm: _delta_since(
+                    s_wm["watermark"], s_wm["watermark_b"]
+                ),
+            )
         v = _merge_nets(
             spark,
             mv,
@@ -1335,10 +1371,8 @@ def _fold_stream_batch(
             else:
                 break  # first unfolded data commit: floor stops here
         live_k = _with_key_exprs(_with_where(live, d), d)
-        nets = (
-            _nets_with_extrema(live_k, keys, sums, mins, maxs, cnt)
-            if (mins or maxs)
-            else _nets(live_k, keys, sums, cnt)
+        nets = _nets_with_extrema(
+            live_k, keys, sums, mins, maxs, cnt
         ).persist()
 
         def _folded_state_rows(trig: DataFrame) -> DataFrame:

@@ -18,13 +18,6 @@ Two strategies behind one interface:
   targets — target rows not matched by key survive, matched keys are
   replaced (last-write-wins). This is the Delta MERGE fallback shape and
   costs a full rewrite; prefer the partition strategy at scale.
-
-- ``DeltaMergeWriter``: real ``MERGE INTO`` on a Delta Lake table when
-  delta-spark is installed (BASELINE's stated production stack is
-  "Spark SQL + Delta/Iceberg over S3"). The import is guarded so this
-  module stays dependency-free where Delta is absent (this environment,
-  SURVEY.md §7.1) — constructing the writer without delta-spark raises
-  immediately with the fallback named.
 """
 
 from __future__ import annotations
@@ -150,114 +143,6 @@ class PartitionOverwriteMergeWriter:
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
-
-
-try:  # delta-spark is optional; every use fails fast with guidance
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAS_DELTA = True
-except ImportError:  # pragma: no cover - exercised where delta is absent
-    DeltaTable = None  # type: ignore[assignment]
-    HAS_DELTA = False
-
-
-class DeltaMergeWriter:
-    """Key-level MERGE via Delta Lake's transactional ``MERGE INTO`` —
-    the engine's native strategy when delta-spark is installed
-    (reference ``dbt/models/marts/fct_daily_store_metrics.sql:1-5``
-    ``incremental_strategy='merge'``, executed for real instead of via
-    partition overwrite).
-
-    Matches ``PartitionOverwriteMergeWriter``'s surface (write_full /
-    merge_upsert / merge_apply / read) so the two strategies are
-    drop-in interchangeable behind one test matrix. Scale posture: the
-    MERGE shuffles only on the key columns and Delta's file-skipping
-    stats prune untouched files — same partition discipline as the
-    fallback, with ACID commit instead of directory swap.
-
-    The session must carry the Delta extension
-    (``spark.sql.extensions=io.delta.sql.DeltaSparkSessionExtension``,
-    ``spark.sql.catalog.spark_catalog=org.apache.spark.sql.delta.
-    catalog.DeltaCatalog``) — pass them via ``build_session``'s
-    ``extra_conf``.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        keys: Sequence[str],
-        partition_col: str | None = "dt",
-    ) -> None:
-        if not HAS_DELTA:
-            raise ImportError(
-                "DeltaMergeWriter requires delta-spark, which is not "
-                "installed — use PartitionOverwriteMergeWriter (default) "
-                "or AntiJoinMergeWriter instead"
-            )
-        self.path = path
-        self.keys = list(keys)
-        self.partition_col = partition_col
-
-    def _merge_cond(self) -> str:
-        return " AND ".join(f"t.{k} <=> u.{k}" for k in self.keys)
-
-    def write_full(self, df: DataFrame) -> None:
-        w = df.write.format("delta").mode("overwrite").option(
-            "overwriteSchema", "true"
-        )
-        if self.partition_col:
-            w = w.partitionBy(self.partition_col)
-        w.save(self.path)
-
-    def merge_upsert(self, spark: SparkSession, updates: DataFrame) -> None:
-        """WHEN MATCHED UPDATE ALL + WHEN NOT MATCHED INSERT ALL."""
-        if not table_exists(self.path):
-            self.write_full(updates)
-            return
-        (
-            DeltaTable.forPath(spark, self.path)
-            .alias("t")
-            .merge(updates.alias("u"), self._merge_cond())
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    def merge_apply(
-        self, spark: SparkSession, changes: DataFrame, op_col: str = "op"
-    ) -> None:
-        """Full MERGE from a change feed: op='delete' removes the key,
-        op='upsert' updates-or-inserts — the same contract
-        ``merge_apply`` implements on plain parquet."""
-        if op_col not in changes.columns:
-            raise ValueError(
-                f"DeltaMergeWriter.merge_apply: change feed has no "
-                f"'{op_col}' column (columns: {changes.columns})"
-            )
-        if not table_exists(self.path):
-            self.write_full(
-                changes.filter(f"{op_col} = 'upsert'").drop(op_col)
-            )
-            return
-        cols = [c for c in changes.columns if c != op_col]
-        (
-            DeltaTable.forPath(spark, self.path)
-            .alias("t")
-            .merge(changes.alias("u"), self._merge_cond())
-            .whenMatchedDelete(condition=f"u.{op_col} = 'delete'")
-            .whenMatchedUpdate(
-                condition=f"u.{op_col} = 'upsert'",
-                set={c: f"u.{c}" for c in cols},
-            )
-            .whenNotMatchedInsert(
-                condition=f"u.{op_col} = 'upsert'",
-                values={c: f"u.{c}" for c in cols},
-            )
-            .execute()
-        )
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.format("delta").load(self.path)
 
 
 class AntiJoinMergeWriter:

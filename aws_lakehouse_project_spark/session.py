@@ -37,9 +37,9 @@ def build_session(
     conf = {
         # parquet writes: zstd beats snappy on size at similar read
         # speed (guide §6/§9) — at 100 TB the written-byte and scan-byte
-        # savings compound across every zone; measured neutral at sf0.1
-        # (A/B table in OPTIMIZATION_r15.md). Env-parameterised so the
-        # A/B stays reproducible.
+        # savings compound across every zone. That it is time-neutral
+        # against snappy is unmeasured here. Env-parameterised so an
+        # A/B can flip it (perfbench records the codec per run).
         "spark.sql.parquet.compression.codec": os.environ.get(
             "SPARK_GRAFT_PARQUET_CODEC", "zstd"
         ),

@@ -1,112 +1,117 @@
-"""Incremental MV maintenance (operators/incremental.py): the fold must
-be indistinguishable from a full recompute — including group birth,
-group retirement at count zero, NULL group keys, and schema stability
-across repeated folds (the property the parquet round-trip in
-q_incremental_mv depends on)."""
+"""Incremental MV maintenance on the declarative engine
+(plans/matview.py): a REFRESH that folds the change feed must be
+indistinguishable from a full recompute — including group birth, group
+retirement at count zero, NULL-exact sums, schema stability across
+refreshes, the bounded MIN/MAX rescan and the COUNT(DISTINCT) support
+tables. Base rows carry an ``id`` so every delete/update is an exact
+predicate."""
 
 from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
-from aws_lakehouse_project_spark.operators.incremental import (
-    fold_changes_into_aggregate,
+from aws_lakehouse_project_spark.plans.matview import (
+    _support_table,
+    create_materialized_view,
+    join_signed_delta,
+    refresh_materialized_view,
 )
+from aws_lakehouse_project_spark.plans.versioned import VersionedTable
 
 DEC = "decimal(28,2)"
+SUM_SCHEMA = "id bigint, k string, rev decimal(28,2)"
 
 
-def _mv(spark, rows):
-    return spark.createDataFrame(
-        rows, "k string, rev decimal(28,2), n bigint"
+def _base(spark, tmp_path, rows, schema):
+    base = VersionedTable(str(tmp_path / "base"))
+    base.write_full(spark.createDataFrame(rows, schema))
+    return base
+
+
+def _refresh(spark, mv, base):
+    """One incremental REFRESH; returns the stored view."""
+    _, mode = refresh_materialized_view(spark, mv, base)
+    assert mode == "incremental"
+    return mv.read(spark)
+
+
+def _sum_view(spark, tmp_path, rows):
+    """Base (id, k, rev) and a per-k SUM(rev)/COUNT(*) view over it."""
+    base = _base(spark, tmp_path, rows, SUM_SCHEMA)
+    mv = VersionedTable(str(tmp_path / "mv"))
+    create_materialized_view(
+        spark, "base", base, mv, keys=["k"], sums=[["rev", "rev"]],
+        count_col="n",
     )
+    return base, mv
 
 
-def _delta(spark, rows):
-    return spark.createDataFrame(
-        rows, "_change_type string, k string, rev decimal(28,2)"
-    )
-
-
-def _fold(mv, delta):
-    return fold_changes_into_aggregate(
-        mv, delta, group_keys=["k"], sum_cols=["rev"], count_col="n"
-    )
+def _append(spark, base, rows):
+    base.append(spark.createDataFrame(rows, SUM_SCHEMA))
 
 
 def _as_dict(df):
     return {r["k"]: (r["rev"], r["n"]) for r in df.collect()}
 
 
-def test_insert_updates_and_new_group(spark):
-    mv = _mv(spark, [("a", Decimal("10.00"), 2)])
-    delta = _delta(
-        spark,
-        [
-            ("insert", "a", Decimal("5.00")),
-            ("insert", "b", Decimal("7.50")),
-        ],
+def test_insert_updates_and_new_group(spark, tmp_path):
+    base, mv = _sum_view(
+        spark, tmp_path, [(1, "a", Decimal("4.00")), (2, "a", Decimal("6.00"))]
     )
-    out = _as_dict(_fold(mv, delta))
-    assert out == {
+    _append(spark, base, [(3, "a", Decimal("5.00")), (4, "b", Decimal("7.50"))])
+    assert _as_dict(_refresh(spark, mv, base)) == {
         "a": (Decimal("15.00"), 3),
         "b": (Decimal("7.50"), 1),
     }
 
 
-def test_update_pair_is_net_change(spark):
-    mv = _mv(spark, [("a", Decimal("10.00"), 2)])
-    delta = _delta(
-        spark,
-        [
-            ("update_preimage", "a", Decimal("4.00")),
-            ("update_postimage", "a", Decimal("9.00")),
-        ],
+def test_update_pair_is_net_change(spark, tmp_path):
+    base, mv = _sum_view(
+        spark, tmp_path, [(1, "a", Decimal("4.00")), (2, "a", Decimal("6.00"))]
     )
-    out = _as_dict(_fold(mv, delta))
+    # the feed carries update_preimage 4.00 / update_postimage 9.00
+    base.update_where(spark, "id = 1", {"rev": "cast(9.00 as decimal(28,2))"})
+    out = _as_dict(_refresh(spark, mv, base))
     assert out == {"a": (Decimal("15.00"), 2)}  # count unchanged
 
 
-def test_group_retires_at_zero_count(spark):
-    mv = _mv(
-        spark,
-        [("a", Decimal("10.00"), 1), ("b", Decimal("3.00"), 1)],
+def test_group_retires_at_zero_count(spark, tmp_path):
+    base, mv = _sum_view(
+        spark, tmp_path, [(1, "a", Decimal("10.00")), (2, "b", Decimal("3.00"))]
     )
-    delta = _delta(spark, [("delete", "a", Decimal("10.00"))])
-    out = _as_dict(_fold(mv, delta))
-    assert out == {"b": (Decimal("3.00"), 1)}
+    base.delete_where(spark, "id = 1")
+    assert _as_dict(_refresh(spark, mv, base)) == {"b": (Decimal("3.00"), 1)}
 
 
-def test_null_group_key_is_a_group(spark):
-    mv = _mv(spark, [(None, Decimal("1.00"), 1)])
-    delta = _delta(spark, [("insert", None, Decimal("2.00"))])
-    out = _as_dict(_fold(mv, delta))
-    assert out == {None: (Decimal("3.00"), 2)}
-
-
-def test_schema_stable_across_folds(spark):
-    """Repeated folds must not widen types — the MV is persisted
-    between generations and its parquet schema is its contract."""
-    mv = _mv(spark, [("a", Decimal("10.00"), 2)])
+def test_schema_stable_across_folds(spark, tmp_path):
+    """Repeated refreshes must not widen types — the view is a stored
+    table and its schema is its contract."""
+    base, mv = _sum_view(
+        spark, tmp_path, [(1, "a", Decimal("4.00")), (2, "a", Decimal("6.00"))]
+    )
 
     def shape(df):  # nullability is not part of the contract
         return [(f.name, f.dataType) for f in df.schema.fields]
 
+    before = shape(mv.read(spark))
     for i in range(3):
-        delta = _delta(spark, [("insert", "a", Decimal("1.00"))])
-        mv2 = _fold(mv, delta)
-        assert shape(mv2) == shape(mv), f"fold {i} changed the schema"
-        mv = mv2
-    assert _as_dict(mv) == {"a": (Decimal("13.00"), 5)}
+        _append(spark, base, [(10 + i, "a", Decimal("1.00"))])
+        assert shape(_refresh(spark, mv, base)) == before, (
+            f"refresh {i} changed the schema"
+        )
+    assert _as_dict(mv.read(spark)) == {"a": (Decimal("13.00"), 5)}
 
 
-def test_fold_equals_recompute_random(spark):
-    """Property: fold(recompute(S0), cdf(S0→S1)) == recompute(S1) on a
+def test_fold_equals_recompute_random(spark, tmp_path):
+    """Property: refresh(create(S0), S0→S1) == recompute(S1) on a
     generated state pair with inserts, deletes, and updates mixed."""
-    base = [(f"k{i % 7}", Decimal(i)) for i in range(50)]
-    s0 = spark.createDataFrame(base, "k string, rev decimal(28,2)")
+    base_rows = [(i, f"k{i % 7}", Decimal(i)) for i in range(50)]
+    base, mv = _sum_view(spark, tmp_path, base_rows)
+    s0 = spark.createDataFrame(base_rows, SUM_SCHEMA)
     # S1: drop rows with rev % 5 == 0, double rev where rev % 3 == 0,
     # add 10 brand-new rows in new groups
+    new_rows = [(50 + i, f"new{i}", Decimal(100 + i)) for i in range(10)]
     s1 = (
         s0.filter(F.col("rev") % 5 != 0)
         .withColumn(
@@ -115,13 +120,13 @@ def test_fold_equals_recompute_random(spark):
             .otherwise(F.col("rev"))
             .cast(DEC),
         )
-        .unionByName(
-            spark.createDataFrame(
-                [(f"new{i}", Decimal(100 + i)) for i in range(10)],
-                "k string, rev decimal(28,2)",
-            )
-        )
+        .unionByName(spark.createDataFrame(new_rows, SUM_SCHEMA))
     )
+    base.delete_where(spark, "rev % 5 = 0")
+    base.update_where(
+        spark, "rev % 3 = 0", {"rev": "cast(rev * 2 as decimal(28,2))"}
+    )
+    _append(spark, base, new_rows)
 
     def recompute(df):
         return df.groupBy("k").agg(
@@ -129,28 +134,22 @@ def test_fold_equals_recompute_random(spark):
             F.count(F.lit(1)).alias("n"),
         )
 
-    # CDF of s0→s1 as a plain multiset diff (insert/delete vocabulary)
-    ins = s1.exceptAll(s0).withColumn("_change_type", F.lit("insert"))
-    del_ = s0.exceptAll(s1).withColumn("_change_type", F.lit("delete"))
-    delta = ins.unionByName(del_).select("_change_type", "k", "rev")
-
-    folded = _as_dict(_fold(recompute(s0), delta))
-    full = _as_dict(recompute(s1))
-    assert folded == full
+    assert _as_dict(_refresh(spark, mv, base)) == _as_dict(recompute(s1))
 
 
-def test_delta_must_carry_mv_names(spark):
-    mv = _mv(spark, [("a", Decimal("1.00"), 1)])
-    bad = spark.createDataFrame(
-        [("insert", "a", Decimal("1.00"))],
-        "_change_type string, k string, amount decimal(28,2)",
-    )
-    with pytest.raises(Exception, match="rev|UNRESOLVED"):
-        _fold(mv, bad).collect()
+def test_delta_must_carry_mv_names(spark, tmp_path):
+    """A measure naming a column the base (and so its change feed) does
+    not carry fails loudly instead of folding."""
+    base = _base(spark, tmp_path, [(1, "a", Decimal("1.00"))], SUM_SCHEMA)
+    mv = VersionedTable(str(tmp_path / "mv"))
+    with pytest.raises(Exception, match="amount|UNRESOLVED"):
+        create_materialized_view(
+            spark, "base", base, mv, keys=["k"], sums=[["amount", "amount"]]
+        )
 
 
 def test_stream_mv_equals_batch_mv(spark):
-    """The streaming fold (q_stream_mv) and the batch fold
+    """The streaming refresh (q_stream_mv) and the batch refresh
     (q_incremental_mv) must land on identical MV content — SUM/COUNT
     folds are commutative/associative, so micro-batch boundaries are
     invisible in the result."""
@@ -165,167 +164,155 @@ def test_stream_mv_equals_batch_mv(spark):
     assert batch == stream
 
 
-# -- MIN/MAX fold with bounded rescan-on-retraction --------------------------
-
-
-from aws_lakehouse_project_spark.operators.incremental import (  # noqa: E402
-    fold_changes_into_minmax,
-)
-
-
-def _mmv(spark, rows):
-    return spark.createDataFrame(rows, "k string, lo int, hi int, n bigint")
-
-
-def _mdelta(spark, rows):
-    return spark.createDataFrame(rows, "_change_type string, k string, v int")
-
-
-def _mbase(spark, rows):
-    return spark.createDataFrame(rows, "k string, v int")
-
-
-def _mmfold(mv, delta, base):
-    return fold_changes_into_minmax(
-        mv, delta, base, group_keys=["k"], val_col="v",
-        min_col="lo", max_col="hi", count_col="n",
+def test_null_sum_group_stays_null(spark, tmp_path):
+    """SQL SUM of an all-NULL group is NULL; a refresh whose feed adds no
+    values must not rewrite it as 0 (and a value arriving later sums
+    from 0, matching SUM-ignores-NULLs)."""
+    base, mv = _sum_view(
+        spark,
+        tmp_path,
+        [(1, "a", None), (2, "a", None), (3, "b", Decimal("3.00"))],
     )
+    # a NULL-valued insert into group a: count moves, sum stays NULL
+    _append(spark, base, [(4, "a", None)])
+    out = _as_dict(_refresh(spark, mv, base))
+    assert out == {"a": (None, 3), "b": (Decimal("3.00"), 1)}
+    # a real value arriving later starts the sum from 0, not NULL
+    _append(spark, base, [(5, "a", Decimal("5.00"))])
+    assert _as_dict(_refresh(spark, mv, base))["a"] == (Decimal("5.00"), 4)
+
+
+# -- MIN/MAX with bounded rescan-on-retraction --------------------------------
+
+MM_SCHEMA = "id bigint, k string, v int"
+
+
+def _mm_view(spark, tmp_path, vals):
+    """Base (id, k, v) with ids 1.. in ``vals`` order, and a per-k
+    MIN/MAX/COUNT view over it."""
+    base = _base(
+        spark,
+        tmp_path,
+        [(i, k, v) for i, (k, v) in enumerate(vals, start=1)],
+        MM_SCHEMA,
+    )
+    mv = VersionedTable(str(tmp_path / "mv"))
+    create_materialized_view(
+        spark, "base", base, mv, keys=["k"], sums=[], count_col="n",
+        mins=[["v", "lo"]], maxs=[["v", "hi"]],
+    )
+    return base, mv
 
 
 def _mm_dict(df):
     return {r["k"]: (r["lo"], r["hi"], r["n"]) for r in df.collect()}
 
 
-def test_minmax_insert_only_no_rescan(spark):
-    mv = _mmv(spark, [("a", 5, 9, 2)])
-    delta = _mdelta(spark, [("insert", "a", 3), ("insert", "b", 7)])
-    base = _mbase(spark, [("a", 5), ("a", 9), ("a", 3), ("b", 7)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 0  # inserts never rescan
-    assert _mm_dict(out) == {"a": (3, 9, 3), "b": (7, 7, 1)}
+def _rescanned(rescans):
+    return [k for call in rescans for (k,) in call]
 
 
-def test_minmax_non_extremum_delete_no_rescan(spark):
-    mv = _mmv(spark, [("a", 1, 9, 3)])  # values {1, 5, 9}
-    delta = _mdelta(spark, [("delete", "a", 5)])
-    base = _mbase(spark, [("a", 1), ("a", 9)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 0  # 1 < 5 < 9: extrema untouched
-    assert _mm_dict(out) == {"a": (1, 9, 2)}
+def test_minmax_insert_only_no_rescan(spark, tmp_path, rescans):
+    base, mv = _mm_view(spark, tmp_path, [("a", 5), ("a", 9)])
+    base.append(spark.createDataFrame([(3, "a", 3), (4, "b", 7)], MM_SCHEMA))
+    out = _mm_dict(_refresh(spark, mv, base))
+    assert _rescanned(rescans) == []  # inserts never rescan
+    assert out == {"a": (3, 9, 3), "b": (7, 7, 1)}
 
 
-def test_minmax_retracted_min_rescans_that_group_only(spark):
-    mv = _mmv(spark, [("a", 1, 9, 3), ("b", 2, 4, 2)])
-    delta = _mdelta(spark, [("delete", "a", 1)])
-    base = _mbase(spark, [("a", 5), ("a", 9), ("b", 2), ("b", 4)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert [r["k"] for r in rescans.collect()] == ["a"]
-    assert _mm_dict(out) == {"a": (5, 9, 2), "b": (2, 4, 2)}
+def test_minmax_non_extremum_delete_no_rescan(spark, tmp_path, rescans):
+    base, mv = _mm_view(spark, tmp_path, [("a", 1), ("a", 5), ("a", 9)])
+    base.delete_where(spark, "id = 2")
+    out = _mm_dict(_refresh(spark, mv, base))
+    assert _rescanned(rescans) == []  # 1 < 5 < 9: extrema untouched
+    assert out == {"a": (1, 9, 2)}
 
 
-def test_minmax_deleted_duplicate_extremum_rescans_harmlessly(spark):
-    mv = _mmv(spark, [("a", 1, 9, 3)])  # values {1, 1, 9}
-    delta = _mdelta(spark, [("delete", "a", 1)])
-    base = _mbase(spark, [("a", 1), ("a", 9)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 1  # conservative: ties trigger
-    assert _mm_dict(out) == {"a": (1, 9, 2)}  # duplicate min survives
+def test_minmax_retracted_min_rescans_that_group_only(spark, tmp_path, rescans):
+    base, mv = _mm_view(
+        spark, tmp_path, [("a", 1), ("a", 5), ("a", 9), ("b", 2), ("b", 4)]
+    )
+    base.delete_where(spark, "id = 1")
+    out = _mm_dict(_refresh(spark, mv, base))
+    assert _rescanned(rescans) == ["a"]
+    assert out == {"a": (5, 9, 2), "b": (2, 4, 2)}
 
 
-def test_minmax_update_pair_retraction(spark):
+def test_minmax_deleted_duplicate_extremum_rescans_harmlessly(
+    spark, tmp_path, rescans
+):
+    base, mv = _mm_view(spark, tmp_path, [("a", 1), ("a", 1), ("a", 9)])
+    base.delete_where(spark, "id = 1")
+    out = _mm_dict(_refresh(spark, mv, base))
+    assert _rescanned(rescans) == ["a"]  # conservative: ties trigger
+    assert out == {"a": (1, 9, 2)}  # duplicate min survives
+
+
+def test_minmax_update_pair_retraction(spark, tmp_path, rescans):
     # update 9 -> 18: preimage retracts the max, postimage inserts
-    mv = _mmv(spark, [("a", 1, 9, 2)])
-    delta = _mdelta(
-        spark,
-        [("update_preimage", "a", 9), ("update_postimage", "a", 18)],
-    )
-    base = _mbase(spark, [("a", 1), ("a", 18)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 1
-    assert _mm_dict(out) == {"a": (1, 18, 2)}
+    base, mv = _mm_view(spark, tmp_path, [("a", 1), ("a", 9)])
+    base.update_where(spark, "id = 2", {"v": "18"})
+    out = _mm_dict(_refresh(spark, mv, base))
+    assert _rescanned(rescans) == ["a"]
+    assert out == {"a": (1, 18, 2)}
 
 
-def test_minmax_group_retires_when_fully_deleted(spark):
-    mv = _mmv(spark, [("a", 1, 9, 2), ("b", 3, 3, 1)])
-    delta = _mdelta(spark, [("delete", "a", 1), ("delete", "a", 9)])
-    base = _mbase(spark, [("b", 3)])  # 'a' gone at the to-version
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 1
-    assert _mm_dict(out) == {"b": (3, 3, 1)}  # rescan finds no rows: retired
+def test_minmax_group_retires_when_fully_deleted(spark, tmp_path, rescans):
+    base, mv = _mm_view(spark, tmp_path, [("a", 1), ("a", 9), ("b", 3)])
+    base.delete_where(spark, "k = 'a'")
+    out = _mm_dict(_refresh(spark, mv, base))
+    # a group whose count reaches zero is deleted without a rescan
+    assert _rescanned(rescans) == []
+    assert out == {"b": (3, 3, 1)}
 
 
-def test_minmax_null_values_never_trigger(spark):
-    mv = _mmv(spark, [("a", 1, 9, 3)])  # one row has v NULL
-    delta = spark.createDataFrame(
-        [("delete", "a", None)], "_change_type string, k string, v int"
-    )
-    base = _mbase(spark, [("a", 1), ("a", 9)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 0  # MIN/MAX ignore NULLs
-    assert _mm_dict(out) == {"a": (1, 9, 2)}
+def test_minmax_null_values_never_trigger(spark, tmp_path, rescans):
+    base, mv = _mm_view(spark, tmp_path, [("a", 1), ("a", None), ("a", 9)])
+    base.delete_where(spark, "id = 2")
+    out = _mm_dict(_refresh(spark, mv, base))
+    assert _rescanned(rescans) == []  # MIN/MAX ignore NULLs
+    assert out == {"a": (1, 9, 2)}
 
 
-def test_minmax_null_group_key(spark):
-    mv = _mmv(spark, [(None, 4, 8, 2)])
-    delta = _mdelta(spark, [("delete", None, 4), ("insert", None, 6)])
-    base = _mbase(spark, [(None, 8), (None, 6)])
-    out, rescans = _mmfold(mv, delta, base)
-    assert rescans.count() == 1
-    assert _mm_dict(out) == {None: (6, 8, 2)}
-
-
-def test_minmax_fold_equals_recompute_random(spark):
-    """End-to-end over random mutations: fold ≡ recompute, and the
+def test_minmax_fold_equals_recompute_random(spark, tmp_path, rescans):
+    """End-to-end over random mutations: refresh ≡ recompute, and the
     rescan set stays a strict subset of the groups (bounded)."""
     import random
 
     rng = random.Random(11)
-    rows = [(f"g{rng.randrange(12)}", rng.randrange(1000)) for _ in range(400)]
-    state = list(rows)
-    base0 = _mbase(spark, state)
-    mv = base0.groupBy("k").agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
+    vals = [(f"g{rng.randrange(12)}", rng.randrange(1000)) for _ in range(400)]
+    base, mv = _mm_view(spark, tmp_path, vals)
+    state = [(i, k, v) for i, (k, v) in enumerate(vals, start=1)]
+    next_id = len(state) + 1
     total_rescans = 0
     for _ in range(3):
         dels = rng.sample(state, 60)
-        inss = [
-            (f"g{rng.randrange(12)}", rng.randrange(1000)) for _ in range(40)
-        ]
-        # remove exactly one copy per sampled delete (the scratch list
-        # is consumed by .remove; `dels` itself stays intact for the
-        # delta below)
-        pending = list(dels)
-        state = [r for r in state if r not in pending or pending.remove(r)]
-        state.extend(inss)
-        delta = spark.createDataFrame(
-            [("delete", k, v) for k, v in dels]
-            + [("insert", k, v) for k, v in inss],
-            "_change_type string, k string, v int",
-        )
-        base = _mbase(spark, state)
-        mv, rescans = _mmfold(mv, delta, base)
-        n_res = rescans.count()
+        inss = []
+        for _ in range(40):
+            inss.append((next_id, f"g{rng.randrange(12)}", rng.randrange(1000)))
+            next_id += 1
+        gone = {i for i, _, _ in dels}
+        state = [r for r in state if r[0] not in gone] + inss
+        base.delete_where(spark, f"id IN ({', '.join(map(str, sorted(gone)))})")
+        base.append(spark.createDataFrame(inss, MM_SCHEMA))
+        rescans.clear()
+        _refresh(spark, mv, base)
+        n_res = len(_rescanned(rescans))
         assert n_res < 12
         total_rescans += n_res
     expect = _mm_dict(
-        _mbase(spark, state).groupBy("k").agg(
+        spark.createDataFrame(state, MM_SCHEMA).groupBy("k").agg(
             F.min("v").alias("lo"), F.max("v").alias("hi"),
             F.count(F.lit(1)).cast("long").alias("n"),
         )
     )
-    assert _mm_dict(mv) == expect
+    assert _mm_dict(mv.read(spark)) == expect
     assert total_rescans >= 1
 
 
 # ---------------------------------------------------------------------------
 # join_signed_delta: the bilinear delta rule Δ(A⋈B) = ΔA⋈B₀ + A₀⋈ΔB + ΔA⋈ΔB
 # ---------------------------------------------------------------------------
-
-from aws_lakehouse_project_spark.operators.incremental import (  # noqa: E402
-    join_signed_delta,
-)
 
 A_SCHEMA = "cid bigint, amount decimal(28,2)"
 B_SCHEMA = "cid bigint, nation string"
@@ -471,61 +458,59 @@ def test_join_delta_both_none_rejected(spark):
 # COUNT(DISTINCT) support-table maintenance (the value joins the group key)
 # ---------------------------------------------------------------------------
 
-
-def _support(spark, rows):
-    return spark.createDataFrame(rows, "g string, v bigint, mult bigint")
+DIST_SCHEMA = "id bigint, g string, v bigint, amt int"
 
 
-def _sup_delta(spark, rows):
-    return spark.createDataFrame(rows, "_change_type string, g string, v bigint")
-
-
-def _fold_support(sup, delta):
-    return fold_changes_into_aggregate(
-        sup, delta, group_keys=["g", "v"], sum_cols=[], count_col="mult"
+def _distinct_view(spark, tmp_path, rows):
+    """Base (id, g, v, amt) and a per-g COUNT(DISTINCT v) view over it."""
+    base = _base(spark, tmp_path, rows, DIST_SCHEMA)
+    mv = VersionedTable(str(tmp_path / "mv"))
+    create_materialized_view(
+        spark, "base", base, mv, keys=["g"], sums=[], count_col="n",
+        distincts=[["v", "d"]],
     )
+    return base, mv
 
 
-def test_distinct_delete_decrements_only_on_last_occurrence(spark):
-    sup = _support(spark, [("a", 1, 2), ("a", 2, 1)])
-    # one of the two (a,1) rows goes: multiplicity 2→1, distinct stays 2
-    out1 = _fold_support(sup, _sup_delta(spark, [("delete", "a", 1)]))
-    assert {(r["g"], r["v"], r["mult"]) for r in out1.collect()} == {
-        ("a", 1, 1), ("a", 2, 1)
+def _support_rows(spark, mv):
+    return {
+        (r["g"], r["__dv"], r["__mult"])
+        for r in _support_table(mv, "d").read(spark).collect()
     }
+
+
+def test_distinct_delete_decrements_only_on_last_occurrence(spark, tmp_path):
+    base, mv = _distinct_view(
+        spark, tmp_path, [(1, "a", 1, 0), (2, "a", 1, 0), (3, "a", 2, 0)]
+    )
+    # one of the two (a,1) rows goes: multiplicity 2→1, distinct stays 2
+    base.delete_where(spark, "id = 1")
+    out1 = _refresh(spark, mv, base)
+    assert _support_rows(spark, mv) == {("a", 1, 1), ("a", 2, 1)}
+    assert [r["d"] for r in out1.collect()] == [2]
     # the LAST (a,2) row goes: support row retires, distinct drops to 1
-    out2 = _fold_support(out1, _sup_delta(spark, [("delete", "a", 2)]))
-    assert {(r["g"], r["v"]) for r in out2.collect()} == {("a", 1)}
+    base.delete_where(spark, "id = 3")
+    out2 = _refresh(spark, mv, base)
+    assert {(g, v) for g, v, _ in _support_rows(spark, mv)} == {("a", 1)}
+    assert [r["d"] for r in out2.collect()] == [1]
 
 
-def test_distinct_update_pair_same_value_cancels(spark):
+def test_distinct_update_pair_same_value_cancels(spark, tmp_path):
     """A measure-only update (same group, same distinct value) must not
     move the multiplicity."""
-    sup = _support(spark, [("a", 1, 3)])
-    out = _fold_support(
-        sup,
-        _sup_delta(
-            spark,
-            [("update_preimage", "a", 1), ("update_postimage", "a", 1)],
-        ),
+    base, mv = _distinct_view(
+        spark, tmp_path, [(1, "a", 1, 0), (2, "a", 1, 0), (3, "a", 1, 0)]
     )
-    assert [(r["g"], r["v"], r["mult"]) for r in out.collect()] == [
-        ("a", 1, 3)
-    ]
+    base.update_where(spark, "id = 1", {"amt": "amt + 5"})
+    _refresh(spark, mv, base)
+    assert _support_rows(spark, mv) == {("a", 1, 3)}
 
 
-def test_distinct_update_moves_value_across_support_rows(spark):
-    sup = _support(spark, [("a", 1, 1)])
-    out = _fold_support(
-        sup,
-        _sup_delta(
-            spark,
-            [("update_preimage", "a", 1), ("update_postimage", "a", 9)],
-        ),
-    )
-    assert {(r["g"], r["v"], r["mult"]) for r in out.collect()} == {
-        ("a", 9, 1)
-    }
+def test_distinct_update_moves_value_across_support_rows(spark, tmp_path):
+    base, mv = _distinct_view(spark, tmp_path, [(1, "a", 1, 0)])
+    base.update_where(spark, "id = 1", {"v": "9"})
+    _refresh(spark, mv, base)
+    assert _support_rows(spark, mv) == {("a", 9, 1)}
 
 
 # ---------------------------------------------------------------------------
@@ -613,31 +598,3 @@ def test_scd2_rejects_column_drift(spark):
     delta = spark.createDataFrame([("insert", 1, "A")], CDF_SCHEMA)
     with pytest.raises(ValueError, match="history columns"):
         scd2_apply_changes(hist, delta, ["k"], ["seg"], version=1)
-
-
-def test_null_sum_group_stays_null(spark):
-    """SQL SUM of an all-NULL group is NULL; a fold whose delta adds no
-    values must not rewrite it as 0 (and a value arriving later sums
-    from 0, matching SUM-ignores-NULLs)."""
-    mv = spark.createDataFrame(
-        [("a", None, 2), ("b", Decimal("3.00"), 1)],
-        "k string, rev decimal(28,2), n bigint",
-    )
-    # delta touches group a with a NULL-valued insert: count moves, sum stays NULL
-    out = _fold(
-        mv,
-        spark.createDataFrame(
-            [("insert", "a", None)],
-            "_change_type string, k string, rev decimal(28,2)",
-        ),
-    )
-    assert _as_dict(out) == {"a": (None, 3), "b": (Decimal("3.00"), 1)}
-    # a real value arriving later starts the sum from 0, not NULL
-    out2 = _fold(
-        out,
-        spark.createDataFrame(
-            [("insert", "a", Decimal("5.00"))],
-            "_change_type string, k string, rev decimal(28,2)",
-        ),
-    )
-    assert _as_dict(out2)["a"] == (Decimal("5.00"), 4)

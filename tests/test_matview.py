@@ -286,6 +286,29 @@ def test_minmax_group_death_and_birth(spark, lh):
     assert _mm_rows(lh) == {("c", Decimal("2.00"), Decimal("4.00"), 2)}
 
 
+def test_minmax_rescan_is_bounded(spark, lh, rescans):
+    """The bounded rescan-on-retraction, asserted: an insert-only
+    refresh rescans no group; a refresh whose deletes retract extrema
+    rescans at least one group, fewer than the view holds, and only the
+    groups whose extremum a delete tied or beat."""
+    # six groups g0..g5; g<i % 6> holds i, i+6, i+12, i+18
+    _create_mm(spark, lh, [(f"g{i % 6}", f"{i}.00") for i in range(1, 25)])
+    _mk(spark, [("g0", "0.50"), ("g1", "99.00")]).createOrReplaceTempView(
+        "mm_ins"
+    )
+    lh.sql("INSERT INTO base SELECT * FROM mm_ins")
+    lh.sql("REFRESH MATERIALIZED VIEW mv")
+    assert [k for call in rescans for (k,) in call] == []
+    # g2's MIN (2.00) and g3's MAX (21.00) retract; g4's 10.00 does not
+    lh.sql("DELETE FROM base WHERE amt IN (2.00, 21.00, 10.00)")
+    rescans.clear()
+    lh.sql("REFRESH MATERIALIZED VIEW mv")
+    rescanned = [k for call in rescans for (k,) in call]
+    assert 1 <= len(rescanned) < len(_mm_rows(lh))
+    assert sorted(rescanned) == ["g2", "g3"]
+    assert _mm_rows(lh) == _mm_recompute(lh)
+
+
 def test_minmax_mixed_with_sum_multi_commit(spark, lh):
     _mk(
         spark,

@@ -289,68 +289,6 @@ def test_write_full_replaces_stale_partitions(spark, tmp_path):
     assert got == {(3, "d3")}
 
 
-def test_delta_writer_requires_delta_spark():
-    """Without delta-spark the Delta strategy must fail at construction
-    with the fallback named — never at first merge."""
-    import pytest
-
-    from aws_lakehouse_project_spark.plans import merge as merge_mod
-
-    if merge_mod.HAS_DELTA:
-        pytest.skip("delta-spark installed; constructor guard not reachable")
-    with pytest.raises(ImportError, match="PartitionOverwriteMergeWriter"):
-        merge_mod.DeltaMergeWriter("/tmp/never-created", keys=["k"])
-
-
-def test_delta_merge_matches_partition_overwrite_strategy(tmp_path):
-    """Strategy matrix: the Delta MERGE writer and the partition-
-    overwrite fallback must produce identical tables from the same
-    upsert + change-feed sequence. Runs only where delta-spark exists
-    (skipped in this environment)."""
-    import pytest
-
-    pytest.importorskip("delta")
-    from pyspark.sql import SparkSession
-
-    from aws_lakehouse_project_spark.plans.merge import (
-        DeltaMergeWriter,
-        PartitionOverwriteMergeWriter,
-        merge_apply,
-    )
-    from aws_lakehouse_project_spark.session import build_session
-
-    SparkSession.getActiveSession() and SparkSession.getActiveSession().stop()
-    spark = build_session(
-        app_name="delta-matrix",
-        master="local[4]",
-        extra_conf={
-            "spark.sql.extensions": "io.delta.sql.DeltaSparkSessionExtension",
-            "spark.sql.catalog.spark_catalog": (
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog"
-            ),
-        },
-    )
-    base = spark.createDataFrame(
-        [(1, 10.0, "d1"), (2, 20.0, "d1"), (3, 30.0, "d2")],
-        "k int, v double, dt string",
-    )
-    changes = spark.createDataFrame(
-        [(1, 11.0, "d1", "upsert"), (3, 0.0, "d2", "delete"), (4, 40.0, "d2", "upsert")],
-        "k int, v double, dt string, op string",
-    )
-    delta = DeltaMergeWriter(str(tmp_path / "delta"), keys=["k", "dt"])
-    delta.write_full(base)
-    delta.merge_apply(spark, changes)
-
-    po = PartitionOverwriteMergeWriter(str(tmp_path / "po"), partition_col="dt")
-    po.write_full(base)
-    merge_apply(po, spark, changes, keys=["k", "dt"])
-
-    got_delta = {tuple(r) for r in delta.read(spark).select("k", "v", "dt").collect()}
-    got_po = {tuple(r) for r in po.read(spark).select("k", "v", "dt").collect()}
-    assert got_delta == got_po == {(1, 11.0, "d1"), (2, 20.0, "d1"), (4, 40.0, "d2")}
-
-
 def test_touched_partition_guard_caps_key_like_partition_col(spark, tmp_path):
     """A change feed whose partition_col is key-like (more distinct
     values than the cap) must fail loudly BEFORE the driver-side list

@@ -594,22 +594,46 @@ mv_state_strategy = st.lists(
 
 @given(s0=mv_state_strategy, s1=mv_state_strategy)
 @settings(**SLOW)
-def test_mv_fold_equals_recompute_any_states(spark, s0, s1):
-    """For ANY two multiset states, folding the insert/delete diff of
-    S0→S1 into S0's aggregate reproduces S1's aggregate exactly —
-    including groups that appear, vanish, or change only in value
-    (operators/incremental.py)."""
-    from aws_lakehouse_project_spark.operators.incremental import (
-        fold_changes_into_aggregate,
+def test_mv_fold_equals_recompute_any_states(spark, s0, s1, tmp_path_factory):
+    """For ANY two multiset states, refreshing S0's materialized view
+    after the commits that turn S0 into S1 (deletes and inserts of the
+    insert/delete diff, each row addressed by its id) reproduces S1's
+    aggregate exactly — including groups that appear, vanish, or change
+    only in value (plans/matview.py)."""
+    from aws_lakehouse_project_spark.plans.matview import (
+        create_materialized_view,
+        refresh_materialized_view,
     )
+    from aws_lakehouse_project_spark.plans.versioned import VersionedTable
 
-    schema = "k int, rev decimal(28,2)"
-    d0 = spark.createDataFrame(
-        [(k, v) for k, v in s0], schema
+    schema = "id bigint, k int, rev decimal(28,2)"
+    rows0 = [(i, k, v) for i, (k, v) in enumerate(s0)]
+    # the multiset diff S0→S1: each S1 row keeps one unused equal S0 row
+    # or is inserted; S0 rows left unmatched are deleted
+    unused = {}
+    for i, k, v in rows0:
+        unused.setdefault((k, v), []).append(i)
+    ins = []
+    for k, v in s1:
+        if unused.get((k, v)):
+            unused[(k, v)].pop()
+        else:
+            ins.append((len(rows0) + len(ins), k, v))
+    gone = sorted(i for ids in unused.values() for i in ids)
+
+    work = tmp_path_factory.mktemp("mvprop")
+    base = VersionedTable(str(work / "base"))
+    base.write_full(spark.createDataFrame(rows0, schema))
+    mv = VersionedTable(str(work / "mv"))
+    create_materialized_view(
+        spark, "base", base, mv, keys=["k"], sums=[["rev", "rev"]],
+        count_col="n",
     )
-    d1 = spark.createDataFrame(
-        [(k, v) for k, v in s1], schema
-    )
+    if gone:
+        base.delete_where(spark, f"id IN ({', '.join(map(str, gone))})")
+    if ins:
+        base.append(spark.createDataFrame(ins, schema))
+    refresh_materialized_view(spark, mv, base)
 
     def recompute(df):
         return df.groupBy("k").agg(
@@ -617,15 +641,8 @@ def test_mv_fold_equals_recompute_any_states(spark, s0, s1):
             F.count(F.lit(1)).alias("n"),
         )
 
-    ins = d1.exceptAll(d0).withColumn("_change_type", F.lit("insert"))
-    dels = d0.exceptAll(d1).withColumn("_change_type", F.lit("delete"))
-    delta = ins.unionByName(dels).select("_change_type", "k", "rev")
-    folded = {
-        r["k"]: (r["rev"], r["n"])
-        for r in fold_changes_into_aggregate(
-            recompute(d0), delta, ["k"], ["rev"], "n"
-        ).collect()
-    }
+    folded = {r["k"]: (r["rev"], r["n"]) for r in mv.read(spark).collect()}
+    d1 = spark.createDataFrame([(k, v) for k, v in s1], "k int, rev decimal(28,2)")
     full = {r["k"]: (r["rev"], r["n"]) for r in recompute(d1).collect()}
     assert folded == full
 

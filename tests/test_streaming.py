@@ -203,3 +203,51 @@ def test_stream_join_equals_batch_interval_join(spark, tmp_path):
     want_rows = sorted((tuple(r) for r in want.collect()))
     assert len(got_rows) > 0
     assert got_rows == want_rows
+
+
+def test_stream_merge_skips_null_ts_events(spark, tmp_path):
+    """An event with a NULL ``ts`` fits no daily window, so q_stream_merge
+    stages it into no drop and its fact must equal the batch oracle over
+    the events that carry a time. Runs on a copy of the testdata with one
+    NULL-``ts`` event appended."""
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aws_lakehouse_project_spark.operators.lakehouse import (
+        STREAM_MERGE_ORACLE,
+        q_stream_merge,
+    )
+    from tests.test_oracle_diff import canon as canon_rows
+
+    sf = tmp_path / "sf"
+    shutil.copytree(SF_DIR, sf)
+    events = pq.read_table(sf / "events.parquet")
+    no_time = pa.Table.from_pylist(
+        [
+            {
+                "event_id": 10**9,
+                "ts": None,
+                "user_id": 13,
+                "event_type": "purchase",
+                "value": 5.0,
+                "props": '{"k": 1}',
+            }
+        ],
+        schema=events.schema,
+    )
+    pq.write_table(pa.concat_tables([events, no_time]), sf / "events.parquet")
+
+    got = q_stream_merge(spark, str(sf))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM '{sf}/events.parquet' "
+        "WHERE ts IS NOT NULL"
+    )
+    res = con.execute(STREAM_MERGE_ORACLE)
+    want_cols = [d[0] for d in res.description]
+    want = canon_rows(res.fetchall(), want_cols)
+    con.close()
+    assert canon_rows([tuple(r) for r in got.collect()], got.columns) == want
