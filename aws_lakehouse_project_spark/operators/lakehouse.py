@@ -392,8 +392,8 @@ def q_wap_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     (validated against existing data in one aggregate). Three gates are
     then driven in order, and the query FAILS unless each behaves:
     (1) an append with negated revenue must be rejected by the
-    constraint — enforcement rides the commit's own stats pass, no
-    extra scan (``plans/versioned.py::_file_stats``) — with the head
+    constraint — the violation count rides the commit's own write, no
+    extra scan (``plans/versioned.py::_write_commit_files``) — with the head
     unmoved; (2) a WAP attempt whose audit suite rejects (truncated
     batch) must delete its staged files and leave the head unmoved —
     bad data is stopped BEFORE visibility, never rolled back after;
@@ -462,12 +462,12 @@ def q_notnull_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``plans/versioned.py::set_not_null`` — r13 verdict task 8): the
     invariant is validated against existing data at DDL time, persisted
     through the SAME constraint channel CHECK uses, and enforced on
-    every later commit inside the stats pass. Gates driven in order,
+    every later commit on its own write. Gates driven in order,
     failing the query if any misbehaves: (1) ``ALTER COLUMN segment SET
     NOT NULL`` on clean data commits metadata-only and DESCRIBE DETAIL
     surfaces it; (2) an INSERT carrying a NULL segment is REFUSED with
     the head unmoved; (3) a WAP append staging a NULL is refused before
-    visibility (the constraint rides the staging pass, before any
+    visibility (the constraint rides the staging write, before any
     audit); (4) ``DROP NOT NULL`` re-admits NULLs, and re-SETTING while
     NULL rows exist refuses; (5) after deleting the NULL rows, SET
     succeeds again and a valid sentinel row flows. Oracle = the final
@@ -1992,7 +1992,7 @@ def q_scan_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file Bloom-sidecar data skipping (Delta's bloom filter
     index shape; ``plans/versioned.py::_write_bloom_sidecars`` /
     ``scan(eq=...)``): the table writes a split-block Bloom per file
-    for ``o_orderkey`` at commit (the stats pass already scanned the
+    for ``o_orderkey`` at commit (over the just-written, page-cache-hot
     bytes), and a point lookup probes it at PLAN time. The probe key
     is a mid-range order key under a RANDOM layout, so min/max spans
     are non-selective — every file covers nearly the full key range —
@@ -2190,9 +2190,9 @@ SCAN_NULL_ORACLE = f"""
 @demo_query("q_scan_null_skipping", oracle=SCAN_NULL_ORACLE)
 def q_scan_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null-count file skipping (Delta's nullCount stat;
-    ``plans/versioned.py::scan(is_null=True)``): the stats pass records
-    per-file null counts for every stats column in the SAME single
-    aggregate, and an ``IS NULL`` scan drops every file whose recorded
+    ``plans/versioned.py::scan(is_null=True)``): every commit records
+    per-file null counts for every stats column from the parquet
+    footers, and an ``IS NULL`` scan drops every file whose recorded
     null count is zero at PLAN time. The table is range-clustered by
     the null-determining key, so nulls concentrate in a minority of
     files and the guard can FAIL the query unless the pruned plan reads
@@ -2575,12 +2575,7 @@ def q_materialized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM fact VERSION AS OF {v0} GROUP BY dt"
     )
 
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW daily_rev").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW daily_rev").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "daily_rev")
     return lh.sql(
         "SELECT dt, CAST(revenue AS DOUBLE) AS revenue, "
         "CAST(lo AS DOUBLE) AS lo, CAST(hi AS DOUBLE) AS hi, "
@@ -2643,12 +2638,7 @@ def q_materialized_view_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM fact VERSION AS OF {v0} GROUP BY dt"
     )
 
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW daily_custs").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW daily_custs").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "daily_custs")
     return lh.sql(
         "SELECT dt, n_custs, CAST(revenue AS DOUBLE) AS revenue, "
         "n_orders FROM daily_custs"
@@ -2707,12 +2697,7 @@ def q_materialized_view_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM fact VERSION AS OF {v0} "
         "WHERE floor(price) % 4 < 2 GROUP BY dt"
     )
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW cheap_rev").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW cheap_rev").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "cheap_rev")
     return lh.sql(
         "SELECT dt, CAST(revenue AS DOUBLE) AS revenue, "
         "CAST(lo AS DOUBLE) AS lo, n_orders FROM cheap_rev"
@@ -2785,7 +2770,7 @@ def q_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from .incremental import INCREMENTAL_MV_JOIN_ORACLE  # noqa: E402
+from .incremental import INCREMENTAL_MV_JOIN_ORACLE, _refresh_twice  # noqa: E402
 
 
 @demo_query(
@@ -2821,12 +2806,7 @@ def q_materialized_view_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"JOIN dim VERSION AS OF {dv0} USING (cust_id) GROUP BY nation"
     )
 
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW nation_rev").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW nation_rev").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "nation_rev")
     return lh.sql(
         "SELECT nation, CAST(revenue AS DOUBLE) AS revenue, n_lines "
         "FROM nation_rev"
@@ -2897,12 +2877,7 @@ def q_materialized_view_join_exprkey(
         f"JOIN dim VERSION AS OF {dv0} USING (cust_id) "
         "GROUP BY nation % 5, floor(price / 1000)"
     )
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW region_band").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW region_band").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "region_band")
     return lh.sql(
         "SELECT CAST(region AS INT) AS region, "
         "CAST(band AS BIGINT) AS band, "
@@ -2978,12 +2953,7 @@ def q_materialized_view_join_minmax(
         f"JOIN dim VERSION AS OF {dv0} USING (cust_id) GROUP BY nation"
     )
 
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW nation_rev").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW nation_rev").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "nation_rev")
     return lh.sql(
         "SELECT nation, CAST(revenue AS DOUBLE) AS revenue, "
         "CAST(lo AS DOUBLE) AS lo, CAST(hi AS DOUBLE) AS hi, n_lines "
@@ -3223,12 +3193,7 @@ def q_materialized_view_join_distinct(
         f"JOIN dim VERSION AS OF {dv0} USING (cust_id) GROUP BY nation"
     )
 
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW nation_custs").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW nation_custs").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "nation_custs")
     return lh.sql(
         "SELECT nation, n_custs, CAST(revenue AS DOUBLE) AS revenue, "
         "n_lines FROM nation_custs"
@@ -3298,12 +3263,7 @@ def q_materialized_view_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"FROM fact VERSION AS OF {v0} GROUP BY dt"
     )
 
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW daily_split").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW daily_split").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "daily_split")
     return lh.sql(
         "SELECT dt, n_even, CAST(rev_even AS DOUBLE) AS rev_even, "
         "CAST(lo_even AS DOUBLE) AS lo_even, nc_even, "
@@ -3467,12 +3427,7 @@ def q_materialized_view_exprkey(
         "MIN(price) AS lo, COUNT(*) AS n_orders "
         f"FROM fact VERSION AS OF {v0} GROUP BY trunc(dt, 'month')"
     )
-    r1 = lh.sql("REFRESH MATERIALIZED VIEW monthly").first()
-    if r1["mode"] != "incremental":
-        raise AssertionError(f"expected incremental refresh, got {r1}")
-    r2 = lh.sql("REFRESH MATERIALIZED VIEW monthly").first()
-    if r2["mode"] != "noop" or r2["version"] != r1["version"]:
-        raise AssertionError(f"second refresh not a no-op: {r2}")
+    _refresh_twice(lh, "monthly")
     # the GROUP-BY-alias spelling is the same view
     lh.create("monthly2", os.path.join(work, "mv2"))
     lh.sql(

@@ -150,8 +150,8 @@ class LakehousePipeline:
         is the snapshot atomically published (Iceberg's
         write-audit-publish — readers can never see unaudited data); the
         suite's row-level expectations are additionally installed as
-        CHECK constraints so every FUTURE write path — merge, append,
-        restore — re-enforces them inside its own commit."""
+        CHECK constraints, so every FUTURE commit — merge, append,
+        restore — counts its rows against them on its own write."""
         out = os.path.join(self.config.curated_dir, domain)
         if self.config.versioned_publish:
             published = self._publish_versioned(domain, staged, out)

@@ -24,8 +24,8 @@ metadata tree use, re-expressed minimally:
   property that makes upserts affordable at 100 TB — cost scales with
   the touched-file footprint, not the table.
 - **Data skipping**: each commit records per-file row counts and
-  min/max stats for requested columns (one footer-cheap aggregate over
-  the new files); ``scan`` prunes the file list against simple
+  min/max stats for requested columns (read from the new files' parquet
+  footers); ``scan`` prunes the file list against simple
   range/equality predicates before Spark ever plans the read — the
   manifest-level half of partition pruning, which works on ANY column,
   not just the partition key.
@@ -73,7 +73,7 @@ import time
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -367,16 +367,28 @@ def _violation_error(path: str, bad: dict) -> ConstraintViolationError:
     )
 
 
+def _violation_counters(cons: dict) -> list[Column]:
+    """One ``count_if`` per constraint, aliased ``v0, v1, ...`` in
+    ``cons`` order — aggregated by ``_count_violations`` and observed on
+    every commit's write by ``_write_commit_files``."""
+    return [
+        F.count_if(_violation_expr(e)).alias(f"v{i}")
+        for i, e in enumerate(cons.values())
+    ]
+
+
+def _nonzero_violations(cons: dict, counts) -> dict:
+    """{name: n_violations} for the constraints whose ``v{i}`` count in
+    ``counts`` (a Row or an observed-metrics dict) is non-zero."""
+    return {n: counts[f"v{i}"] for i, n in enumerate(cons) if counts[f"v{i}"] > 0}
+
+
 def _count_violations(df: DataFrame, cons: dict) -> dict:
     """One aggregate over ``df`` counting violations of every active
     constraint; returns {name: n_violations} for the non-zero ones."""
     if not cons:
         return {}
-    names = list(cons)
-    row = df.agg(
-        *[F.count_if(_violation_expr(cons[n])).alias(f"v{i}") for i, n in enumerate(names)]
-    ).first()
-    return {n: row[f"v{i}"] for i, n in enumerate(names) if row[f"v{i}"] > 0}
+    return _nonzero_violations(cons, df.agg(*_violation_counters(cons)).first())
 
 
 class VersionedTable:
@@ -637,24 +649,20 @@ class VersionedTable:
         df: DataFrame,
         version_hint: int,
         mapping: dict | None = None,
-        checked: dict[str, str] | None = None,
     ) -> tuple[list[str], dict]:
         """Materialize ``df`` into a fresh immutable commit directory;
-        returns (relative file paths, per-file stats).
+        returns (relative file paths, per-file stats). This is the one
+        place a commit's rows are checked and its stats taken:
 
-        ``checked=None``: the head's active CHECK constraints are
-        enforced here — their violation counts ride the stats scan; any
-        violation deletes the just-written directory and raises, so the
-        write path is constraint-checked BEFORE a manifest can reference
-        the files. ``checked`` given: the caller already verified every
-        row the commit ADDS against that constraint set (read from the
-        manifest the commit is based on) — copy-on-write MERGE checks
-        its pinned upsert rows, DELETE and OPTIMIZE add none, and
-        survivor rows come from files the set already covers
-        (``add_constraint``, ``set_not_null`` and ``restore`` validate
-        the head) — so stats come from the parquet footers with no
-        re-scan. Either way the set is recorded for ``_commit``'s
-        claim-time check.
+        - every row written is counted against the head's active CHECK
+          and NOT NULL constraints ON the write itself (observed
+          metrics ride the write job — no extra Spark job); any
+          violation deletes the just-written directory and raises
+          ``ConstraintViolationError`` before a manifest can reference
+          the files. The set is recorded for ``_commit``'s claim-time
+          check;
+        - stats come from the written files' parquet footers (a scan
+          only where a footer stat is not provably exact).
 
         ``df`` arrives with LOGICAL column names; files are written
         with PHYSICAL names (per ``mapping``; None = the head's) so
@@ -662,6 +670,13 @@ class VersionedTable:
         multi-file scan serves any logical schema."""
         if mapping is None:
             mapping = self._head_mapping()
+        cons = self.constraints()
+        observed = Observation() if cons else None
+        if observed is not None:
+            # attached BEFORE the physical rename: constraints name
+            # logical columns (an unresolvable one raises here, before
+            # anything is written)
+            df = df.observe(observed, *_violation_counters(cons))
         if mapping:
             df = df.select(
                 *[F.col(c).alias(mapping.get(c, c)) for c in df.columns]
@@ -674,50 +689,38 @@ class VersionedTable:
         # statistics.truncate.length = Integer.MAX_VALUE; a session that
         # lowered it would otherwise record truncated bounds as exact
         # manifest stats (ADVICE r14).
-        df.write.mode("overwrite").option(
-            "parquet.statistics.truncate.length", str(2**31 - 1)
-        ).parquet(abs_dir)
-        rel = [
-            os.path.join(_DATA_DIR, commit_dir, n)
-            for n in sorted(os.listdir(abs_dir))
-            if n.endswith(".parquet")
-        ]
-        cons = self.constraints() if checked is None else {}
         try:
-            # stats come from the just-written parquet FOOTERS whenever
-            # possible (guide §1/§6: the row counts, min/max and null
-            # counts are already in the file metadata — re-scanning the
-            # data to recompute them is a whole second read of every
-            # commit's bytes at 100 TB, and one extra Spark job per
-            # commit locally). An in-write CHECK still needs the scan
-            # (violation counts are expression evaluation), and any
-            # footer surprise (missing/inexact stats, exotic type) falls
-            # back to the scan — the manifest contents are identical
-            # either way (tests/test_footer_stats.py asserts parity).
-            stats = None if cons else self._footer_file_stats(rel, mapping)
+            df.write.mode("overwrite").option(
+                "parquet.statistics.truncate.length", str(2**31 - 1)
+            ).parquet(abs_dir)
+            if observed is not None:
+                bad = _nonzero_violations(cons, observed.get)
+                if bad:
+                    raise _violation_error(self.path, bad)
+            rel = [
+                os.path.join(_DATA_DIR, commit_dir, n)
+                for n in sorted(os.listdir(abs_dir))
+                if n.endswith(".parquet")
+            ]
+            # the row counts, min/max and null counts are already in the
+            # file metadata — re-scanning the data to recompute them is
+            # a whole second read of every commit's bytes; any footer
+            # surprise (missing/inexact stats, exotic type) falls back to
+            # the scan, with identical manifest contents either way
+            # (tests/test_footer_stats.py asserts parity)
+            stats = self._footer_file_stats(rel, mapping)
             if stats is None:
-                stats = self._file_stats(
-                    df.sparkSession, rel, constraints=cons, mapping=mapping
-                )
+                stats = self._file_stats(df.sparkSession, rel, mapping=mapping)
             self._write_bloom_sidecars(
                 df.sparkSession, abs_dir, rel, stats, mapping
             )
         except BaseException:
-            # constraint violation OR any stats/analysis failure (e.g. a
-            # constraint referencing a column the frame lacks): never
+            # constraint violation OR any write/stats failure: never
             # leave the staged directory orphaned
             shutil.rmtree(abs_dir, ignore_errors=True)
             raise
-        self._validated_constraints = cons if checked is None else dict(checked)
+        self._validated_constraints = cons
         return rel, stats
-
-    def _check_added_rows(self, df: DataFrame, cons: dict[str, str]) -> None:
-        """Raise ``ConstraintViolationError`` (constraint names and
-        violating-row counts) if any row ``df`` would add violates
-        ``cons`` — one aggregate, run before any file is written."""
-        bad = _count_violations(df, cons)
-        if bad:
-            raise _violation_error(self.path, bad)
 
     def constraints(self) -> dict[str, str]:
         """Active CHECK constraints (name → SQL expression) from the
@@ -759,42 +762,14 @@ class VersionedTable:
 
         want_phys = [mapping.get(c, c) for c in (self.stats_cols or [])]
 
-        # Footer fetches are independent, latency-bound driver I/O: a
-        # commit of thousands of files on an object store pays one
-        # ~10-100 ms round-trip each sequentially (VERDICT r15 item 5).
-        # A thread pool overlaps them; folding stays in submission
-        # order, so the result is identical to the sequential loop.
-        # MEASURED (r15 micro-benchmark): on a LOCAL filesystem footers
-        # are page-cache hits (~80 µs each) and the pool only adds
-        # contention — sequential won at every count up to 1024 files
-        # (0.085 s vs 0.365 s pooled) — so pooling is gated on a remote
-        # path scheme ("://" in the table path), where per-footer
-        # latency dwarfs thread overhead at any realistic commit size.
-        # SPARK_GRAFT_FOOTER_POOL_MIN overrides the file-count gate for
-        # deployments whose "local" path is actually network-backed.
-        def _open(f: str):
-            try:
-                return pq.ParquetFile(os.path.join(self.path, f))
-            except Exception:  # noqa: BLE001 — unreadable footer → scan
-                return None
-
-        pool_min = int(
-            os.environ.get(
-                "SPARK_GRAFT_FOOTER_POOL_MIN",
-                "8" if "://" in self.path else "1000000000",
-            )
-        )
-        if len(rel_files) >= pool_min:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=16) as pool:
-                opened = list(pool.map(_open, rel_files))
-        else:
-            opened = [_open(f) for f in rel_files]
-
+        # Footers are read sequentially: local footers are page-cache
+        # hits (~80 µs each), and a thread pool measured slower at every
+        # file count up to 1024 (0.085 s sequential vs 0.365 s pooled).
         out: dict = {}
-        for f, pf in zip(rel_files, opened, strict=True):
-            if pf is None:
+        for f in rel_files:
+            try:
+                pf = pq.ParquetFile(os.path.join(self.path, f))
+            except Exception:  # noqa: BLE001 — unreadable footer → scan
                 return None
             md = pf.metadata
             if md.num_rows == 0:
@@ -896,26 +871,25 @@ class VersionedTable:
         self,
         spark: SparkSession,
         rel_files: list[str],
-        constraints: dict[str, str] | None = None,
         mapping: dict | None = None,
         borrowed: frozenset | None = None,
     ) -> dict:
-        """Per-file row counts + min/max of ``stats_cols`` — one
-        aggregate over the just-written files (footer-cheap for counts;
-        column stats scan only the stats columns, pruned by parquet).
-        CHECK-constraint violation counts fold into the SAME aggregate
-        (standard SQL semantics: NULL passes, only FALSE violates);
-        any violation raises ``ConstraintViolationError``.
+        """Per-file row counts + min/max + null counts of ``stats_cols``
+        by one Spark aggregate over ``rel_files`` — the same dict
+        ``_footer_file_stats`` reads from footers. Used only where
+        footers cannot vouch for a stat: the footer fallback (e.g. INT96
+        timestamps, nested columns) and ``convert_from_parquet``'s
+        foreign files. It checks no constraints (``_write_commit_files``
+        counts those on the write).
 
         Files carry PHYSICAL column names; the frame is renamed back to
-        LOGICAL before stats/constraint expressions run, and stat keys
-        are stored under PHYSICAL names (immutable across renames, so
-        stats never go stale)."""
+        LOGICAL before the stats expressions run, and stat keys are
+        stored under PHYSICAL names (immutable across renames, so stats
+        never go stale)."""
         if not rel_files:
             return {}
         mapping = mapping or {}
         inv = {p: l for l, p in mapping.items()}
-        cons = list((constraints or {}).items())
         abs_files = [os.path.join(self.path, f) for f in rel_files]
 
         def _logical(dfp: DataFrame) -> DataFrame:
@@ -938,8 +912,6 @@ class VersionedTable:
                 aggs.append(
                     F.count_if(F.col(c).isNull()).alias(f"__nulls_{c}")
                 )
-        for i, (_, expr) in enumerate(cons):
-            aggs.append(F.count_if(_violation_expr(expr)).alias(f"__viol_{i}"))
         rows = (
             spark.read.parquet(*abs_files)
             .withColumn("__file", F.input_file_name())
@@ -948,14 +920,6 @@ class VersionedTable:
             .agg(*aggs)
             .collect()
         )
-        if cons:
-            bad = {
-                name: n
-                for i, (name, _) in enumerate(cons)
-                if (n := sum(r[f"__viol_{i}"] for r in rows)) > 0
-            }
-            if bad:
-                raise _violation_error(self.path, bad)
         by_rel = {}
         for r in rows:
             rel = self._to_rel(r["__file"], borrowed)
@@ -1017,9 +981,9 @@ class VersionedTable:
         into the commit directory, covering every file of this commit —
         Delta's bloom filter index shape. The build is ONE map-side-
         combining ``bit_or`` aggregate per column over the just-written
-        files (the stats pass already scanned them, so the bytes are
-        hot); the driver then packs the (file, block, bits) rows into a
-        base64(zlib(little-endian u64[nblocks])) bitmap per file. The
+        (so page-cache-hot) files; the driver then packs the (file,
+        block, bits) rows into a base64(zlib(little-endian
+        u64[nblocks])) bitmap per file. The
         collect is bounded by the SIDECAR's own size (min(rows, nblocks)
         rows per file, 3 fields each) — ∝ commit churn × bits_per_key/64,
         never ∝ table size; it is the metadata artifact being written,
@@ -2535,10 +2499,9 @@ class VersionedTable:
         """ALTER TABLE ... ADD CONSTRAINT ... CHECK (expr): validates the
         EXISTING head data in one aggregate (rejecting if any row
         violates, like Delta), then publishes the constraint as a
-        metadata-only commit. Every later commit checks the rows it
-        ADDS: appends, overwrites and UPDATEs inside their stats scan;
-        copy-on-write MERGE on its pinned source before writing;
-        DELETE and OPTIMIZE add no rows and take footer stats."""
+        metadata-only commit. Every later commit checks every row it
+        writes on the write itself and takes its stats from the written
+        files' footers (``_write_commit_files``)."""
         if name.startswith(_NOTNULL_PREFIX):
             raise ValueError(
                 f"constraint names under {_NOTNULL_PREFIX!r} are "
@@ -2852,8 +2815,9 @@ class VersionedTable:
         meta: dict | None = None,
     ) -> int:
         """Iceberg's write-audit-publish (WAP) pattern on the manifest
-        layer: the data is STAGED (files written, constraint-checked,
-        but referenced by no manifest — readers cannot see it), each
+        layer: the data is STAGED (files written — constraint-checked on
+        the write, stats from their footers — but referenced by no
+        manifest, so readers cannot see it), each
         audit callable runs against exactly the staged files, and only
         if every audit passes is the snapshot PUBLISHED as an atomic
         commit. A failing audit deletes the staged files and re-raises
@@ -3123,15 +3087,15 @@ class VersionedTable:
            ``merge.materializeSource``): every step below reads the
            churn-sized pinned rows, never re-runs the source's plan,
         1. ``audits`` (callables taking the pinned frame; raise to
-           reject — ``write_audit_publish``'s shape) run, and the pinned
-           rows are counted against the base manifest's CHECK
-           constraints — both before any file is written,
+           reject — ``write_audit_publish``'s shape) run before any file
+           is written,
         2. semi-join target × update-keys tagged with input_file_name →
            the touched-file set (only files actually holding matched keys),
         3. rewrite = (touched-file rows ANTI JOIN keys) ∪ updates,
-        4. commit = untouched files by reference + rewritten files, stats
-           from the written files' parquet footers (survivors come from
-           files the constraint set already covers; no re-scan).
+        4. commit = untouched files by reference + rewritten files; the
+           rewrite's rows are counted against the CHECK constraints on
+           the write itself (a violation removes the staged files and
+           raises) and stats come from its parquet footers.
 
         Scale: step 2 shuffles only the key columns; step 3 reads only
         touched files. An upsert hitting 0.1% of files costs 0.1% of a
@@ -3148,8 +3112,6 @@ class VersionedTable:
         )
         for audit in audits:
             audit(updates)
-        cons = m.get("constraints", {})
-        self._check_added_rows(updates, cons)
         tagged = self._tagged_read(spark, m)
         upd_keys = updates.select(*keys).distinct()
         touched = self._touched_files(
@@ -3170,7 +3132,7 @@ class VersionedTable:
         else:
             new_data = updates
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(new_data, hint, checked=cons)
+        files, stats = self._write_commit_files(new_data, hint)
         v = self._commit(
             "merge",
             files,
@@ -3223,10 +3185,7 @@ class VersionedTable:
             spark, touched, schema, dvs=m.get("dvs"), dv_counts=m.get("dv_counts")
         ).filter(~F.coalesce(predicate, F.lit(False)))
         hint = self.latest_version() + 1
-        # adds no rows: survivors are covered by the constraint set
-        files, stats = self._write_commit_files(
-            survivors, hint, checked=m.get("constraints", {})
-        )
+        files, stats = self._write_commit_files(survivors, hint)
         v = self._commit(
             "delete",
             files,
@@ -3468,7 +3427,14 @@ class VersionedTable:
             ]
         )
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(post, hint)
+        try:
+            files, stats = self._write_commit_files(post, hint)
+        except BaseException:
+            # a rejected rewrite (e.g. a CHECK violation) must not
+            # orphan the deletion-vector sidecar written above
+            dv_dir = next(iter(dv_delta.values()))
+            shutil.rmtree(os.path.join(self.path, dv_dir), ignore_errors=True)
+            raise
         v = self._commit(
             "update",
             files,
@@ -3501,12 +3467,11 @@ class VersionedTable:
         """Full MERGE from a change feed (op='upsert'|'delete') — the
         same contract as ``plans.merge.merge_apply``, executed
         copy-on-write: ``changes`` is pinned once (eager
-        ``localCheckpoint``), its upsert rows are counted against the
-        base manifest's CHECK constraints before any file is written,
-        then one touched-file discovery over ALL change keys, one
-        rewrite dropping matched rows, upserts unioned back in; stats
-        come from the written files' parquet footers (see
-        ``merge_upsert``). Callers need not pin ``changes`` themselves.
+        ``localCheckpoint``), then one touched-file discovery over ALL
+        change keys, one rewrite dropping matched rows, upserts unioned
+        back in; the rewrite is constraint-checked on the write and
+        takes footer stats (see ``merge_upsert``). Callers need not pin
+        ``changes`` themselves.
 
         Returns the new version, or None when the table does not exist
         yet AND the batch carries no upserts (a delete-only feed against
@@ -3525,8 +3490,6 @@ class VersionedTable:
                 return None
             return self.write_full(upserts, meta)
         m = self._manifest()
-        cons = m.get("constraints", {})
-        self._check_added_rows(upserts, cons)
         tagged = self._tagged_read(spark, m)
         all_keys = changes.select(*keys).distinct()
         touched = self._touched_files(tagged.join(all_keys, keys, "left_semi"))
@@ -3543,7 +3506,7 @@ class VersionedTable:
         else:
             new_data = upserts
         hint = self.latest_version() + 1
-        files, stats = self._write_commit_files(new_data, hint, checked=cons)
+        files, stats = self._write_commit_files(new_data, hint)
         v = self._commit(
             "merge",
             files,
@@ -3643,10 +3606,7 @@ class VersionedTable:
         else:
             df = df.repartition(n_out)
         hint = self.latest_version() + 1
-        # content-identical rewrite: adds no rows, checks nothing
-        files, stats = self._write_commit_files(
-            df, hint, checked=m.get("constraints", {})
-        )
+        files, stats = self._write_commit_files(df, hint)
         # no _maybe_cdf: a layout-only commit's change feed is empty by
         # construction (materialize_changes would no-op anyway)
         scope = (

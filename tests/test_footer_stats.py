@@ -4,8 +4,8 @@ scan aggregate they replace (plans/versioned.py::_footer_file_stats).
 The manifest stats plane answers metadata-only MIN/MAX/COUNT queries
 and drives file pruning, so the footer fast path is only legal if it
 reproduces the scan's values exactly — these tests pin that parity per
-type, plus every fallback condition (constraints, huge strings,
-timestamp stats cols, foreign files).
+type, plus every fallback condition (huge strings, timestamp stats
+cols, nested stats cols) and the footer path under constraints.
 """
 
 import os
@@ -108,8 +108,9 @@ def test_footer_fallback_timestamp_stats_col(spark, tmp_path):
 
 
 def test_footer_path_skipped_under_constraints(spark, tmp_path):
-    """CHECK constraints need violation counts — a write into a
-    constrained table must still enforce (and abort on violation)."""
+    """A constrained table's commits count violations on the write
+    itself and still take footer stats: a valid append records the same
+    stats the scan would, a violating append aborts."""
     from aws_lakehouse_project_spark.plans.versioned import (
         ConstraintViolationError,
     )
@@ -118,6 +119,10 @@ def test_footer_path_skipped_under_constraints(spark, tmp_path):
     vt.write_full(spark.range(0, 10).select(F.col("id").alias("k")))
     vt.add_constraint(spark, "k_small", "k < 100")
     vt.append(spark.range(10, 20).select(F.col("id").alias("k")))
+    m = vt._manifest()
+    assert {f: m["stats"][f] for f in m["files"]} == vt._file_stats(
+        spark, m["files"]
+    )
     with pytest.raises(ConstraintViolationError):
         vt.append(spark.range(100, 110).select(F.col("id").alias("k")))
     m = vt._manifest()

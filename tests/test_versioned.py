@@ -605,22 +605,46 @@ def test_add_constraint_rejects_existing_violations(spark, vt):
     assert vt.latest_version() == 0  # nothing committed
 
 
-def test_constraint_enforced_on_every_write_path(spark, vt):
+def test_constraint_enforced_on_every_write_path(spark, vt, monkeypatch):
     from aws_lakehouse_project_spark.plans.versioned import (
         ConstraintViolationError,
     )
 
+    def no_rescan(*_a, **_kw):
+        raise AssertionError("commit re-scanned its own files")
+
+    # violations are counted on the write and int/string stats come
+    # from the footers: no commit may re-scan what it just wrote
+    monkeypatch.setattr(VersionedTable, "_file_stats", no_rescan)
     vt.write_full(_mk(spark, [(1, "a"), (2, "b")]))
     v1 = vt.add_constraint(spark, "k_nonneg", "k >= 0")
     assert vt._manifest(v1)["op"] == "set_constraint"
     head = _rows(vt.read(spark))
-    # append, merge, and overwrite all reject; head never moves
-    with pytest.raises(ConstraintViolationError, match="k_nonneg"):
-        vt.append(_mk(spark, [(-1, "x")]))
-    with pytest.raises(ConstraintViolationError, match="k_nonneg"):
-        vt.merge_upsert(spark, _mk(spark, [(2, "B"), (-9, "x")]), keys=["k"])
-    with pytest.raises(ConstraintViolationError, match="k_nonneg"):
-        vt.write_full(_mk(spark, [(-2, "x")]))
+    changes = spark.createDataFrame(
+        [(2, "B", "upsert"), (-4, "x", "upsert")], "k int, v string, op string"
+    )
+    # every write path rejects with the violating-row count; head never
+    # moves
+    writes = [
+        lambda: vt.append(_mk(spark, [(-1, "x")])),
+        lambda: vt.merge_upsert(
+            spark, _mk(spark, [(2, "B"), (-9, "x")]), keys=["k"]
+        ),
+        lambda: vt.write_full(_mk(spark, [(-2, "x")])),
+        lambda: vt.update_where(spark, "k = 2", {"k": "-5"}),
+        lambda: vt.update_where(
+            spark, "k = 2", {"k": "-5"}, mode="merge_on_read"
+        ),
+        lambda: vt.replace_where(spark, "k <= 2", _mk(spark, [(-3, "x")])),
+        lambda: vt.merge_apply(spark, changes, keys=["k"]),
+        lambda: vt.write_audit_publish(spark, _mk(spark, [(-6, "x")]), []),
+        lambda: vt.write_audit_publish(
+            spark, _mk(spark, [(-7, "x")]), [], mode="append"
+        ),
+    ]
+    for write in writes:
+        with pytest.raises(ConstraintViolationError, match="'k_nonneg': 1"):
+            write()
     assert vt.latest_version() == v1
     assert _rows(vt.read(spark)) == head
     # no orphaned data files from the aborted writes
@@ -637,6 +661,50 @@ def test_constraint_enforced_on_every_write_path(spark, vt):
         spark.createDataFrame([(None, "n")], "k int, v string")
     )
     assert vt.latest_version() == v1 + 1
+    vt.update_where(spark, "k = 1", {"v": "'A'"})
+    assert vt.latest_version() == v1 + 2
+    assert vt.read(spark).filter("k = 1").first()["v"] == "A"
+
+
+def test_concurrent_constraint_observations_do_not_cross(spark, tmp_path):
+    """Two constrained appends race on one session; each commit's
+    violation counts are its own write's, never the other's."""
+    import threading
+
+    from aws_lakehouse_project_spark.plans.versioned import (
+        ConstraintViolationError,
+    )
+
+    tables = {}
+    for name, expr in (("a_pos", "k > 0"), ("b_small", "k < 10")):
+        t = VersionedTable(str(tmp_path / name), stats_cols=["k"])
+        t.write_full(_mk(spark, [(1, "a")]))
+        t.add_constraint(spark, name, expr)
+        tables[name] = t
+    rows = {
+        "a_pos": [(2, "ok"), (3, "ok")],  # valid for a_pos
+        "b_small": [(10, "x"), (20, "y"), (5, "ok")],  # two violate b_small
+    }
+    outcome: dict = {}
+
+    def append(name):
+        try:
+            outcome[name] = tables[name].append(_mk(spark, rows[name]))
+        except Exception as exc:  # noqa: BLE001 — recorded, asserted below
+            outcome[name] = exc
+
+    threads = [threading.Thread(target=append, args=(n,)) for n in tables]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(timeout=300)
+        assert not th.is_alive()
+    assert outcome["a_pos"] == 2
+    assert _rows(tables["a_pos"].read(spark)) == [(1, "a"), (2, "ok"), (3, "ok")]
+    err = outcome["b_small"]
+    assert isinstance(err, ConstraintViolationError)
+    assert "'b_small': 2" in str(err) and "a_pos" not in str(err)
+    assert tables["b_small"].latest_version() == 1
 
 
 def test_drop_constraint_reopens_the_gate(spark, vt):
@@ -1963,7 +2031,7 @@ def test_merge_apply_rejects_violating_upserts_before_writing(spark, vt):
         vt.merge_apply(spark, bad, keys=["k"])
     with pytest.raises(ConstraintViolationError, match="'k_small': 1"):
         vt.merge_upsert(spark, _mk(spark, [(2, "B"), (500, "x")]), keys=["k"])
-    # rejected before any file was written: head and data/ untouched
+    # rejected on the write: staged files removed, head and data/ untouched
     assert vt.latest_version() == v1
     assert _rows(vt.read(spark)) == head
     assert _data_dirs(vt) == dirs
