@@ -18,6 +18,28 @@ Two strategies behind one interface:
   targets — target rows not matched by key survive, matched keys are
   replaced (last-write-wins). This is the Delta MERGE fallback shape and
   costs a full rewrite; prefer the partition strategy at scale.
+
+Two rules hold for every partitioned write here (Delta Lake, VLDB 2020:
+MERGE materializes its source once; writes avoid small files):
+
+- **Pin once.** ``merge_upsert`` and ``merge_apply`` pin their source
+  with one eager ``localCheckpoint`` before anything else reads it; the
+  emptiness check, the touched-partition list, the key anti-join and the
+  union all read the pin. A foreachBatch micro-batch is a stateful
+  streaming plan, so every extra read of the raw frame re-ran it. An
+  empty source writes nothing and leaves the table as it was.
+- **One file per partition value.** Every partitioned write goes through
+  ``PartitionOverwriteMergeWriter._write``, which hash-repartitions on
+  the partition column first, so each task owns whole partition values
+  and each touched ``dt=`` directory gets exactly one file. It uses
+  ``repartition`` rather than the ``REBALANCE`` hint: inside
+  foreachBatch the micro-batch session runs with AQE off, and Spark
+  drops the hint there (``Unrecognized hint: rebalance(dt)``), leaving
+  one file per task per partition.
+
+A NULL partition value is a partition like any other (Hive's
+``__HIVE_DEFAULT_PARTITION__`` directory): a merge that touches it reads
+its rows back. NULL keys never match, as in SQL MERGE.
 """
 
 from __future__ import annotations
@@ -71,6 +93,17 @@ def collect_touched_partitions(
     return vals
 
 
+def _in_partitions(pcol: str, values: Sequence):
+    """Predicate selecting the rows whose ``pcol`` is one of ``values``;
+    a ``None`` among them selects the NULL partition (``isin`` alone
+    never matches NULL)."""
+    from pyspark.sql import functions as F
+
+    col = F.col(pcol)
+    pred = col.cast("string").isin([str(v) for v in values if v is not None])
+    return pred | col.isNull() if None in values else pred
+
+
 class PartitionOverwriteMergeWriter:
     """MERGE via dynamic partition overwrite on the horizon's partitions.
 
@@ -84,6 +117,20 @@ class PartitionOverwriteMergeWriter:
         self.path = path
         self.partition_col = partition_col
 
+    def _write(self, df: DataFrame, overwrite_mode: str) -> None:
+        """The one partitioned write: one file per partition value (all
+        rows of a value hash to one task), overwriting in
+        ``overwrite_mode`` — a per-write option, NOT session conf, so
+        the writer behaves identically on sessions the engine didn't
+        configure."""
+        (
+            df.repartition(self.partition_col)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", overwrite_mode)
+            .partitionBy(self.partition_col)
+            .parquet(self.path)
+        )
+
     def write_full(self, df: DataFrame) -> None:
         # full refresh = STATIC overwrite (overriding the session's
         # dynamic mode): the whole table is replaced, including stale
@@ -91,14 +138,11 @@ class PartitionOverwriteMergeWriter:
         # by a delete-everything merge (dynamic mode would only clear
         # matching partition dirs, and the leftover flat files would
         # break partition discovery on the next read)
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "static"
-        ).partitionBy(self.partition_col).parquet(self.path)
+        self._write(df, "static")
 
     def merge(self, fresh_horizon: DataFrame) -> None:
         """Overwrite exactly the partitions present in ``fresh_horizon``
-        (requires spark.sql.sources.partitionOverwriteMode=dynamic, set
-        by the session factory).
+        (dynamic partition overwrite, set per write).
 
         Correct ONLY when ``fresh_horizon`` contains every row of every
         partition it touches (full recompute — the dbt fact's case). For
@@ -106,14 +150,7 @@ class PartitionOverwriteMergeWriter:
         only the groups that changed) use ``merge_upsert`` — plain merge
         would drop the unchanged groups of a touched partition.
         """
-        (
-            fresh_horizon.write.mode("overwrite")
-            # per-write option, NOT session conf: the writer must behave
-            # identically on sessions the engine didn't configure
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(self.partition_col)
-            .parquet(self.path)
-        )
+        self._write(fresh_horizon, "dynamic")
 
     def merge_upsert(
         self, spark: SparkSession, updates: DataFrame, keys: Sequence[str]
@@ -122,24 +159,28 @@ class PartitionOverwriteMergeWriter:
         partitions not matched by ``keys`` survive, matched keys are
         replaced, new keys insert. Untouched partitions are never read or
         written — the partition-value list (bounded by the horizon, e.g.
-        7 days) prunes the target scan."""
-        if not table_exists(self.path):
-            self.write_full(updates)
-            return
-        from pyspark.sql import functions as F
+        7 days) prunes the target scan.
 
-        touched = collect_touched_partitions(updates, self.partition_col)
+        ``updates`` is evaluated once (pinned, see the module docstring);
+        an empty ``updates`` writes nothing, so callers need no
+        ``isEmpty`` check of their own. Each touched partition, the NULL
+        one included, is rewritten as one file."""
+        pinned = updates.localCheckpoint(eager=True)
+        touched = collect_touched_partitions(pinned, self.partition_col)
+        if not touched:
+            return
+        if not table_exists(self.path):
+            self.write_full(pinned)
+            return
         existing = self.read(spark).filter(
-            F.col(self.partition_col).cast("string").isin([str(v) for v in touched])
+            _in_partitions(self.partition_col, touched)
         )
-        aligned = existing.select(*updates.columns)
-        kept = aligned.join(updates.select(*keys), list(keys), "left_anti")
-        merged = kept.unionByName(updates)
+        aligned = existing.select(*pinned.columns)
+        kept = aligned.join(pinned.select(*keys), list(keys), "left_anti")
+        merged = kept.unionByName(pinned)
         # break lineage: the write replaces files the plan reads
         merged = merged.localCheckpoint(eager=True)
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(self.partition_col).parquet(self.path)
+        self._write(merged, "dynamic")
 
     def read(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -200,6 +241,10 @@ def merge_apply(
     present in the change feed are read or rewritten; within them one
     anti-join on the full change-key set removes matched AND deleted
     rows, then upserts union back in.
+
+    ``changes`` is evaluated once too (the op check reads the pin) and
+    an empty feed writes nothing. Each touched partition is rewritten as
+    one file; one left with no rows, the NULL one included, is removed.
     """
     from pyspark.sql import functions as F
 
@@ -208,6 +253,7 @@ def merge_apply(
             f"merge_apply: change feed has no '{op_col}' column "
             f"(columns: {changes.columns})"
         )
+    changes = changes.localCheckpoint(eager=True)
     bad_ops = (
         changes.select(op_col)
         .filter(~F.col(op_col).isin("upsert", "delete"))
@@ -219,21 +265,19 @@ def merge_apply(
             f"merge_apply: unknown op {bad_ops[0][0]!r} — expected 'upsert' or "
             "'delete' (a silently ignored op would drop changes)"
         )
+    pcol = writer.partition_col
+    touched = collect_touched_partitions(changes, pcol)
+    if not touched:
+        return
     upserts = changes.filter(F.col(op_col) == "upsert").drop(op_col)
     if not table_exists(writer.path):
         writer.write_full(upserts)
         return
-    pcol = writer.partition_col
-    touched = collect_touched_partitions(changes, pcol)
-    existing = writer.read(spark).filter(
-        F.col(pcol).cast("string").isin([str(v) for v in touched])
-    )
+    existing = writer.read(spark).filter(_in_partitions(pcol, touched))
     aligned = existing.select(*upserts.columns)
     kept = aligned.join(changes.select(*keys).distinct(), list(keys), "left_anti")
     merged = kept.unionByName(upserts).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy(pcol).parquet(writer.path)
+    writer._write(merged, "dynamic")
     # dynamic partition overwrite only rewrites partitions PRESENT in the
     # output — a touched partition whose every row was deleted emits no
     # rows and would silently keep its old files. Drop those explicitly
@@ -247,8 +291,9 @@ def merge_apply(
     }
     for v in touched:
         if str(v) not in surviving:
-            part_dir = os.path.join(writer.path, f"{pcol}={v}")
-            shutil.rmtree(part_dir, ignore_errors=True)
+            # Hive's directory for the NULL partition value
+            name = "__HIVE_DEFAULT_PARTITION__" if v is None else v
+            shutil.rmtree(os.path.join(writer.path, f"{pcol}={name}"), ignore_errors=True)
     # a merge that deleted EVERY remaining row leaves a directory with no
     # data files — unreadable (parquet cannot infer a schema). Write the
     # (empty, schema-bearing) merged frame flat so the table stays a
@@ -332,9 +377,6 @@ def backfill(
     """
     n = 0
     for v in partition_values:
-        df = compute_for_partition(v)
-        df.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(writer.partition_col).parquet(writer.path)
+        writer._write(compute_for_partition(v), "dynamic")
         n += 1
     return n

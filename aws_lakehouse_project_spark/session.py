@@ -49,8 +49,10 @@ def build_session(
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
         "spark.sql.execution.arrow.pyspark.enabled": "true",
-        # merge writer fallback (plans/merge.py) replaces only touched
-        # (dt, store-key) partitions, not the whole table
+        # session default for plain partitioned writes: replace only the
+        # partitions a write touches. The merge writer (plans/merge.py)
+        # sets the mode on each write itself and writes one file per
+        # touched partition from a source it evaluates once
         "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # parquet scans: keep split size at the default 128m for cluster
         # parity; local runs are small enough either way

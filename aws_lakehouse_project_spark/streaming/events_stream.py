@@ -151,14 +151,19 @@ def run_stream_to_merge(
     of the reference's incremental merge. The checkpoint gives
     exactly-once across restarts. ``agg_builder`` defaults to the daily
     per-user aggregation; the sliding-window variant passes its own.
+
+    Each micro-batch is evaluated once: ``merge_upsert`` pins it and
+    returns without writing when the pin is empty (the no-data batches
+    that advance the watermark), so there is no ``isEmpty`` here — it
+    would re-run the stateful plan. Each touched partition is rewritten
+    as one file, so the target does not gather a file per task per
+    batch.
     """
     writer = PartitionOverwriteMergeWriter(target_path, partition_col=partition_col)
     build = agg_builder or daily_user_metrics_stream
     agg = build(read_events_stream(spark, events_path), watermark=watermark)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         # update mode emits only the CHANGED key groups — merge at key
         # level so unchanged groups in a touched partition survive
         writer.merge_upsert(batch_df.sparkSession, batch_df, list(keys))

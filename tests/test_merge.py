@@ -329,3 +329,173 @@ def test_touched_partition_guard_caps_key_like_partition_col(spark, tmp_path):
             )
     finally:
         merge_mod.MAX_TOUCHED_PARTITIONS = old_cap
+
+
+def _files_per_partition(path):
+    """{``dt=`` directory name: number of parquet files in it}."""
+    import os
+
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(path, d)))
+        for d in os.listdir(path)
+        if d.startswith("dt=")
+    }
+
+
+def _table_state(path):
+    """{relative path: mtime_ns} of every file under ``path``."""
+    import os
+
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_every_write_leaves_one_file_per_partition(spark, tmp_path):
+    """Each partitioned write (write_full, merge, merge_upsert,
+    merge_apply, backfill) rewrites a touched partition as ONE file, not
+    one per task, however the source is split."""
+    from aws_lakehouse_project_spark.plans.merge import backfill, merge_apply
+
+    path = str(tmp_path / "t")
+    writer = PartitionOverwriteMergeWriter(path, partition_col="dt")
+    rows = [(k, float(k), f"d{k % 3}") for k in range(24)]
+    base = spark.createDataFrame(rows, "k int, v double, dt string").repartition(4)
+
+    def check(n_parts):
+        assert _files_per_partition(path) == {f"dt=d{i}": 1 for i in range(n_parts)}
+
+    writer.write_full(base)
+    check(3)
+    writer.merge(base.filter("dt = 'd0'").repartition(4))
+    check(3)
+    upd = spark.createDataFrame(
+        [(k, -1.0, f"d{k % 4}") for k in range(0, 24, 5)], "k int, v double, dt string"
+    ).repartition(4)
+    writer.merge_upsert(spark, upd, keys=["k", "dt"])
+    check(4)
+    changes = spark.createDataFrame(
+        [(k, 9.0, f"d{k % 3}", "upsert" if k % 2 else "delete") for k in range(12)],
+        "k int, v double, dt string, op string",
+    ).repartition(4)
+    merge_apply(writer, spark, changes, keys=["k", "dt"])
+    check(4)
+    n = backfill(writer, lambda d: base.filter(base.dt == d).repartition(4), ["d1", "d2"])
+    assert n == 2
+    check(4)
+    got = {(r["k"], r["dt"]) for r in writer.read(spark).collect()}
+    assert {(k, "d1") for k in range(1, 24, 3)} <= got
+
+
+def test_merge_source_is_evaluated_once(spark, tmp_path):
+    """merge_upsert and merge_apply pin their source: a counting UDF on
+    the key runs once per source row. An empty source writes nothing:
+    no table is created and an existing one is left as it was."""
+    from aws_lakehouse_project_spark.plans.merge import merge_apply
+
+    def counted(df):
+        acc = spark.sparkContext.accumulator(0)
+
+        @F.udf("int")
+        def tick(k):
+            acc.add(1)
+            return k
+
+        return df.withColumn("k", tick("k")), acc
+
+    path = str(tmp_path / "t")
+    writer = PartitionOverwriteMergeWriter(path, partition_col="dt")
+    writer.write_full(
+        spark.createDataFrame(
+            [(k, "old", f"d{k % 2}") for k in range(10)], "k int, v string, dt string"
+        )
+    )
+    upd, acc = counted(
+        spark.createDataFrame(
+            [(k, "new", f"d{k % 2}") for k in range(5, 15)], "k int, v string, dt string"
+        )
+    )
+    writer.merge_upsert(spark, upd, keys=["k", "dt"])
+    assert acc.value == 10
+    got = {r["k"]: r["v"] for r in writer.read(spark).collect()}
+    assert got == {k: "old" if k < 5 else "new" for k in range(15)}
+
+    changes, acc = counted(
+        spark.createDataFrame(
+            [(0, "up", "d0", "upsert"), (20, "ins", "d0", "upsert"), (7, None, "d1", "delete")],
+            "k int, v string, dt string, op string",
+        )
+    )
+    merge_apply(writer, spark, changes, keys=["k", "dt"])
+    assert acc.value == 3
+    got = {r["k"]: r["v"] for r in writer.read(spark).collect()}
+    assert got[0] == "up" and got[20] == "ins" and 7 not in got
+
+    # an empty source: no write, no table created, the table unchanged
+    empty = spark.createDataFrame([], "k int, v string, dt string")
+    empty_changes = spark.createDataFrame([], "k int, v string, dt string, op string")
+    fresh = PartitionOverwriteMergeWriter(str(tmp_path / "fresh"), partition_col="dt")
+    fresh.merge_upsert(spark, empty, keys=["k", "dt"])
+    merge_apply(fresh, spark, empty_changes, keys=["k", "dt"])
+    assert not (tmp_path / "fresh").exists()
+    before = _table_state(path)
+    writer.merge_upsert(spark, empty, keys=["k", "dt"])
+    merge_apply(writer, spark, empty_changes, keys=["k", "dt"])
+    assert _table_state(path) == before
+
+
+def test_merge_upsert_keeps_null_partition_rows(spark, tmp_path):
+    """An update in the NULL partition must keep that partition's other
+    rows; NULL keys never match, so the old row with the same k stays
+    too (SQL MERGE semantics, as in VersionedTable.merge_upsert)."""
+    writer = PartitionOverwriteMergeWriter(str(tmp_path / "t"), partition_col="dt")
+    writer.write_full(
+        spark.createDataFrame(
+            [(1, "a", "2024-01-01"), (2, "b", None), (3, "c", None)],
+            "k int, v string, dt string",
+        )
+    )
+    writer.merge_upsert(
+        spark,
+        spark.createDataFrame([(2, "B", None)], "k int, v string, dt string"),
+        keys=["k", "dt"],
+    )
+    got = sorted(
+        (r["k"], r["v"], None if r["dt"] is None else str(r["dt"]))
+        for r in writer.read(spark).collect()
+    )
+    assert got == [(1, "a", "2024-01-01"), (2, "B", None), (2, "b", None), (3, "c", None)]
+
+
+def test_merge_apply_handles_the_null_partition(spark, tmp_path):
+    """merge_apply reads the NULL partition back when a change touches
+    it, and removes it (Hive's __HIVE_DEFAULT_PARTITION__ directory)
+    when every row of it is deleted."""
+    from aws_lakehouse_project_spark.plans.merge import merge_apply
+
+    path = str(tmp_path / "t")
+    writer = PartitionOverwriteMergeWriter(path, partition_col="dt")
+    writer.write_full(
+        spark.createDataFrame(
+            [(1, "a", "d1"), (2, "b", None), (3, "c", None)], "k int, v string, dt string"
+        )
+    )
+    schema = "k int, v string, dt string, op string"
+    merge_apply(
+        writer, spark, spark.createDataFrame([(4, "d", None, "upsert")], schema), keys=["k"]
+    )
+    got = {(r["k"], r["v"], r["dt"]) for r in writer.read(spark).collect()}
+    assert got == {(1, "a", "d1"), (2, "b", None), (3, "c", None), (4, "d", None)}
+
+    deletes = [(k, None, None, "delete") for k in (2, 3, 4)]
+    merge_apply(
+        writer,
+        spark,
+        spark.createDataFrame(deletes + [(1, "A", "d1", "upsert")], schema),
+        keys=["k"],
+    )
+    got = {(r["k"], r["v"], r["dt"]) for r in writer.read(spark).collect()}
+    assert got == {(1, "A", "d1")}
+    assert _files_per_partition(path) == {"dt=d1": 1}

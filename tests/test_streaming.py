@@ -101,6 +101,10 @@ def test_stream_incremental_file_drops(spark, tmp_path):
     )
     want = canon(batch_daily_user_metrics(spark, os.path.join(SF_DIR, "events.parquet")))
     assert got == want
+    # every micro-batch rewrote its touched days as one file each
+    fact = tmp_path / "fact"
+    per_day = {d.name: len(list(d.glob("*.parquet"))) for d in fact.glob("dt=*")}
+    assert per_day and set(per_day.values()) == {1}, per_day
 
 
 def test_multimodal_features(spark):
